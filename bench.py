@@ -179,8 +179,8 @@ def main() -> int:
     # same plans fan out across executors.
     # Swept 4/8 full-suite: 4 shaves task-dispatch overhead on every
     # tiny shuffle stage (72 queries x several stages) without starving
-    # any CPU-heavy stage — the Python/Arrow passes repartition
-    # themselves off this value and none is wider than the data here.
+    # any CPU-heavy stage — those widen their one-file scans to the
+    # executor slots (widen_narrow_scan), independent of this value.
     shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", "4")
     # AQE default OFF for the tiny-SF latency run: adaptive re-planning
     # re-optimizes after every shuffle-stage materialization, which is
@@ -462,12 +462,18 @@ def main() -> int:
     # round-over-round comparison to buy a diagnostic. The noop-sink
     # save() builds a fresh QueryExecution per action, so the probe
     # conf re-plans physically even for plan-cached builders.
-    # SPARK_GRAFT_SCALING_PROBE=0 skips.
+    # SPARK_GRAFT_SCALING_PROBE=0 skips; so does a probe width equal to
+    # the headline width (e.g. 4 cores), which would only repeat the
+    # headline passes.
     scaling_probe = None
+    shuffle_key = "spark.sql.shuffle.partitions"
+    prev_shuffle = spark.conf.get(shuffle_key)
     probe_w = max(4, int(cpus)) if cpus.isdigit() else None
-    if probe_w and os.environ.get("SPARK_GRAFT_SCALING_PROBE", "1") != "0":
-        shuffle_key = "spark.sql.shuffle.partitions"
-        prev_shuffle = spark.conf.get(shuffle_key)
+    if (
+        probe_w
+        and probe_w != int(prev_shuffle)
+        and os.environ.get("SPARK_GRAFT_SCALING_PROBE", "1") != "0"
+    ):
         spark.conf.set(shuffle_key, str(probe_w))
         try:
             probe_best: dict[str, float] = {}

@@ -290,7 +290,7 @@ def shuffle_partitions(spark: SparkSession, n: int):
         spark.conf.set(key, prev)
 
 
-def widen_narrow_scan(df: DataFrame, width: int | None = None) -> DataFrame:
+def widen_narrow_scan(df: DataFrame) -> DataFrame:
     """Fan a CPU-heavy stage out of an unsplittable scan.
 
     Parquet scans parallelize across files and row groups; every
@@ -302,9 +302,9 @@ def widen_narrow_scan(df: DataFrame, width: int | None = None) -> DataFrame:
     pruned columns, megabytes here — and the stage uses the machine.
 
     At cluster scale real tables ship thousands of splits, the
-    condition is false, and NO exchange is inserted — same contract as
-    ``_python_pass_width`` for Arrow passes: width tracks COMPUTE when
-    and only when the data cannot provide it."""
+    condition is false, and NO exchange is inserted: width tracks
+    COMPUTE (the executor slots) when and only when the data cannot
+    provide it."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     master = spark.sparkContext.master or ""
@@ -326,7 +326,7 @@ def widen_narrow_scan(df: DataFrame, width: int | None = None) -> DataFrame:
         return df
     if n_files >= cores:
         return df
-    return df.repartition(width or cores)
+    return df.repartition(cores)
 
 
 def r2(c: Column) -> Column:

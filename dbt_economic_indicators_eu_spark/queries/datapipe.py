@@ -40,16 +40,6 @@ _NON_WS_RE = r"[^ \t\n\x0b\f\r]+"  # a TOKEN (maximal non-ws run)
 # --------------------------------------------------------------------------
 
 
-def _python_pass_width(spark) -> int:
-    """Partition width for CPU-bound Arrow passes (shingle/minhash/
-    simhash hashing): floor of 8 so the Python work spreads across
-    cores even when the session sizes shuffle.partitions to tiny-SF
-    shuffle volume — a shuffle width tracks DATA, a Python pass tracks
-    COMPUTE (swept 4/8/16 at sf0.1: 0.70/0.54/0.56s for the band
-    stage). On a cluster the conf dominates the floor."""
-    return max(8, int(spark.conf.get("spark.sql.shuffle.partitions")))
-
-
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen_narrow_scan(load(spark, sf_dir, "documents"))
     # the shared pinned class (Java \S excludes \x0b, RE2 \S keeps it)
@@ -183,37 +173,34 @@ HAVING count(*) > 1
 # THE corpus tokenization, shared by every shingle/word operator (and
 # re-used by queries/curation.py and corpus.py): ASCII case fold →
 # NULL→'' → collapse \s+ → trim → split on single space. Null text
-# tokenizes to [''] — the convention the Arrow passes, the oracles,
-# and tests/test_null_text_parity.py all pin. Change it HERE (and in
-# the SQL twin below) or engines silently diverge.
+# tokenizes to [''] — the convention the queries, the oracles, and
+# tests/test_null_text_parity.py all pin. Change it HERE (and in the
+# SQL twin below) or engines silently diverge.
 #
-# ASCII-only case folding, pinned across all three tokenizer twins
-# (Spark Column, DuckDB SQL, Python). Full Unicode lower() is
-# ENGINE-DEPENDENT: Java/Python apply ICU full case mapping
-# (U+0130 'İ' -> 'i' + combining dot; context-sensitive Greek final
-# sigma), DuckDB's utf8proc applies simple folding ('İ' -> 'i',
-# 'Σ' -> 'σ' unconditionally) — so a tokenizer built on lower()
-# silently disagrees across engines on real multilingual text.
+# ASCII-only case folding, pinned across both tokenizer twins (Spark
+# Column, DuckDB SQL). Full Unicode lower() is ENGINE-DEPENDENT: Java
+# applies full case mapping (U+0130 'İ' -> 'i' + combining dot;
+# context-sensitive Greek final sigma), DuckDB's utf8proc applies
+# simple folding ('İ' -> 'i', 'Σ' -> 'σ' unconditionally) — so a
+# tokenizer built on lower() silently disagrees across engines on real
+# multilingual text.
 # Folding [A-Z] only is deterministic everywhere; full Unicode
 # normalization (NFC + case folding) belongs to an explicit,
 # versioned normalization stage, not the tokenizer.
 _ASCII_UP = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _ASCII_LO = "abcdefghijklmnopqrstuvwxyz"
-_PY_FOLD = str.maketrans(_ASCII_UP, _ASCII_LO)
 
 
 def ascii_fold(c: F.Column) -> F.Column:
     return F.translate(c, _ASCII_UP, _ASCII_LO)
 
 
-# _WS_CLASS (module top) is the split unit here; identical in Java,
-# RE2, and Python (see _shingles_py). The TRIM charset is pinned the
-# same way: Spark's trim strips only 0x20, but DuckDB's one-arg trim
-# strips Unicode space-category chars (NBSP, EM SPACE, IDEOGRAPHIC
-# SPACE, ...) and Python's bare .strip() strips the full Unicode
-# isspace set (U+2028, NEL, \x1c-\x1f, ...) — so the oracle twin uses
-# trim(x, ' ') and the Python twin .strip(' '), stripping EXACTLY 0x20
-# in all three engines. Pinned by tests/test_unicode_parity.py.
+# _WS_CLASS (module top) is the split unit here; identical in Java and
+# RE2. The TRIM charset is pinned the same way: Spark's trim strips
+# only 0x20, but DuckDB's one-arg trim strips Unicode space-category
+# chars (NBSP, EM SPACE, IDEOGRAPHIC SPACE, ...) — so the oracle twin
+# uses trim(x, ' '), stripping EXACTLY 0x20 in both engines. Pinned by
+# tests/test_unicode_parity.py.
 
 
 def normalized_words() -> F.Column:
@@ -315,38 +302,33 @@ _ORACLE_SHINGLES = f"""
 # (tests/test_null_text_parity.py pins this).
 
 
+def _shingled_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sg): the pinned shingle set of every document, over a
+    widened scan so the per-row regex and hash work uses every executor
+    slot even when the table is one file."""
+    return _with_shingles(
+        widen_narrow_scan(load(spark, sf_dir, "documents")), "sg"
+    )
+
+
+def _shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, _hv): the 32-bit ``md5_bucket`` hash of every shingle —
+    the one per-shingle hash simhash and minhash banding share. Staged
+    as its own column so the md5 runs once per shingle, not once per
+    consumer (lambdas are opaque to common-subexpression elimination)."""
+    return _shingled_corpus(spark, sf_dir).select(
+        "doc_id", F.transform("sg", lambda s: md5_bucket(s)).alias("_hv")
+    )
+
+
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Min-md5 document fingerprint in one narrow Arrow pass (the
-    1-permutation minhash; shares ``_shingles_py``'s pinned shingle
-    semantics). md5 hex compares lexicographically identically in
-    Python, the JVM, and DuckDB — all lowercase hex of the same 16
-    bytes."""
-    import hashlib
-
-    docs = load(spark, sf_dir, "documents")
-
-    def gen(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            fp: list[str] = []
-            n: list[int] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                sg = _shingles_of(text)
-                ids.append(doc_id)
-                fp.append(min(hashlib.md5(s.encode()).hexdigest() for s in sg))
-                n.append(len(sg))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "fingerprint": fp,
-                    "n_shingles": pd.array(n, dtype="int32"),
-                }
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(_python_pass_width(spark))
-        .mapInPandas(gen, "doc_id bigint, fingerprint string, n_shingles int")
+    """Min-md5 document fingerprint (the 1-permutation minhash) as one
+    narrow projection. md5 hex compares lexicographically identically in
+    the JVM and DuckDB — both lowercase hex of the same 16 bytes."""
+    return _shingled_corpus(spark, sf_dir).select(
+        "doc_id",
+        F.array_min(F.transform("sg", F.md5)).alias("fingerprint"),
+        F.size("sg").alias("n_shingles"),
     )
 
 
@@ -386,99 +368,37 @@ _MH_A = (1327217885, 2147483587, 1073741827, 668265263, 374761393, 1431655765, 9
 _MH_B = (1, 7, 13, 31, 61, 127, 251, 509)
 
 
+def _mh_perm(h: F.Column, i: int) -> F.Column:
+    """perm_i(h) in Spark ``bigint`` arithmetic — exact because
+    a_i*h + b_i < 2^63 (tests/test_minhash_twin_exhaustive.py)."""
+    return (F.lit(_MH_A[i]) * h + F.lit(_MH_B[i])) % F.lit(_MH_PRIME)
 
 
-def _shingles_py(text: str, k: int = 3) -> list[str]:
-    """Python twin of ``_with_shingles`` — byte-identical on this
-    corpus. The whitespace class is Java/RE2 ``\\s`` (ASCII), written
-    explicitly so Python's Unicode-aware ``\\s`` cannot diverge; the
-    trim strips EXACTLY 0x20 (.strip(' ') — a bare .strip() would also
-    strip U+2028/NEL/\\x1c..., which the JVM and DuckDB twins keep)."""
-    import re
+def _mh_min(hv: F.Column, i: int) -> F.Column:
+    return F.array_min(F.transform(hv, lambda h: _mh_perm(h, i))).cast("string")
 
-    words = (
-        re.sub(_WS_CLASS, " ", text.translate(_PY_FOLD)).strip(" ").split(" ")
+
+def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, band_idx, band_hash): the ``_NUM_PERM`` min-permutation
+    folds over each document's shingle hashes, grouped into
+    ``_NUM_BANDS`` band keys of ``_BAND_ROWS`` minima joined by '|' and
+    posexploded one row per band. A narrow projection: the only
+    exchange is the banding one downstream."""
+    hv = F.col("_hv")
+    bands = F.array(
+        *[
+            F.concat_ws("|", *[_mh_min(hv, b * _BAND_ROWS + r) for r in range(_BAND_ROWS)])
+            for b in range(_NUM_BANDS)
+        ]
     )
-    if len(words) < k:
-        return [" ".join(words)]
-    seen: set[str] = set()
-    out: list[str] = []
-    for i in range(len(words) - k + 1):
-        s = " ".join(words[i : i + k])
-        if s not in seen:
-            seen.add(s)
-            out.append(s)
-    return out
-
-
-def _shingles_of(text) -> list[str]:
-    """Pinned shingle set of a possibly-NULL text (NULL -> '' — the
-    convention every Arrow pass and oracle shares; see tokenizer block
-    comment)."""
-    return _shingles_py(text if text is not None else "")
-
-
-def _shingle_hashes_u32(text) -> "np.ndarray":
-    """THE 32-bit shingle-hash recipe (md5 hexdigest 8-hex-char prefix
-    as uint64), shared by minhash banding and simhash — their DuckDB
-    oracles pin the identical expression, so changing the width or
-    hash here requires changing the SQL twins in lockstep."""
-    import hashlib
-
-    return np.fromiter(
-        (int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in _shingles_of(text)),
-        dtype=np.uint64,
+    return _shingle_hashes(spark, sf_dir).select(
+        "doc_id", F.posexplode(bands).alias("band_idx", "band_hash")
     )
-
-
-def _banded_minhash_gen():
-    """Arrow-batched shingle→md5→minhash→band pipeline: one hashlib
-    pass and one (n_shingles x n_perm) vectorized modmul per document,
-    emitting (doc_id, band_idx, band_hash) directly — replaces three
-    interpreted HOF layers (transform-md5, 8x array_min folds, the
-    band concat) plus a posexplode. uint64 is exact here: max
-    A * h = 2147483587 * (2^32 - 1) < 2^63 < 2^64."""
-    import hashlib
-
-    a = np.array(_MH_A, dtype=np.uint64)
-    b = np.array(_MH_B, dtype=np.uint64)
-    p = np.uint64(_MH_PRIME)
-
-    def gen(batches):
-        for pdf in batches:
-            doc_ids: list[int] = []
-            band_idx: list[int] = []
-            band_hash: list[str] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                hv = _shingle_hashes_u32(text)
-                sig = (hv[:, None] * a[None, :] + b[None, :]) % p
-                sig = sig.min(axis=0)
-                for bi in range(_NUM_BANDS):
-                    doc_ids.append(doc_id)
-                    band_idx.append(bi)
-                    band_hash.append(
-                        f"{sig[bi * _BAND_ROWS]}|{sig[bi * _BAND_ROWS + 1]}"
-                    )
-            yield pd.DataFrame(
-                {"doc_id": doc_ids, "band_idx": band_idx, "band_hash": band_hash}
-            )
-
-    return gen
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    # Band generation is Arrow-vectorized (see _banded_minhash_gen);
-    # the repartition is load-bearing: the hash work scales with the
-    # data, and a single-file scan would otherwise run it on one core —
-    # the exchange it buys costs only |docs| x (id + text) bytes.
-    banded = (
-        docs.select("doc_id", "text")
-        .repartition(_python_pass_width(spark))
-        .mapInPandas(
-            _banded_minhash_gen(), "doc_id bigint, band_idx int, band_hash string"
-        )
-    )
+    banded = _minhash_bands(spark, sf_dir)
     # Group-then-pair with a hot-bucket cap (quadratic-pair guard,
     # observed drop counts) — see operators/banding.py for the shape
     # and why it beats a banded self-join.
@@ -502,7 +422,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads, un-shuffled across the network — and degrades to a plain
     # shuffle join on doc_id when they are not, where only the join
     # keys + shingle projection of survivors move.
-    # Pinned by tests/test_plans.py::test_dedup_verify_join_adaptive.
+    # Pinned by tests/test_plans.py::test_dedup_verify_join_size_conditional.
     sides = cand.select(
         "doc_id_a",
         "doc_id_b",
@@ -536,7 +456,7 @@ ORACLE_DEDUP_MINHASH = f"""
 WITH shingled AS (SELECT doc_id, shingles AS sg FROM ({_ORACLE_SHINGLES})),
 hashed AS (
   SELECT doc_id, sg,
-         [CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT) for s in sg] AS hv
+         [{md5_bucket_sql('s')} for s in sg] AS hv
   FROM shingled
 ),
 banded_src AS (
@@ -577,48 +497,40 @@ WHERE CAST(len(list_intersect(sa.sg, sb.sg)) AS DOUBLE) / len(list_distinct(sa.s
 # --------------------------------------------------------------------------
 # q_simhash — EXT-DEDUP-SIMHASH: 16-bit SimHash per document. Shingle →
 # 32-bit hash (md5 hex prefix); fingerprint bit k = sign of Σ(±1) over
-# shingles. Explode + one groupBy(doc_id) — scales linearly, no UDFs.
+# shingles. One narrow projection per document — no explode, no UDFs.
 # --------------------------------------------------------------------------
 
 _SIMHASH_BITS = 16
 
 
+def _bits_set(hv: F.Column, k: int) -> F.Column:
+    """How many hashes in ``hv`` have bit k set."""
+    return F.size(F.filter(hv, lambda h: F.shiftright(h, k).bitwiseAND(1) == 1))
+
+
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document simhash in ONE narrow Arrow pass (no explode, no
+    """Per-document simhash as ONE narrow projection (no explode, no
     shuffle): each shingle's md5-derived hash votes ±1 on 16 bit
-    positions and the sign of each bit's tally packs the fingerprint —
-    all small-integer arithmetic, exact in any engine. Replaces the
-    explode → 16 conditional sums → groupBy form, whose shuffle moved
-    |docs| x |shingles| rows just to bring each document's votes back
-    together (they already sit together in the scan)."""
-    import hashlib
-
-    docs = load(spark, sf_dir, "documents")
-    shifts = np.arange(_SIMHASH_BITS, dtype=np.uint64)
-
-    def gen(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            out: list[int] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                hv = _shingle_hashes_u32(text)
-                bits = (hv[:, None] >> shifts[None, :]) & np.uint64(1)  # n x 16
-                votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
-                ids.append(doc_id)
-                out.append(int(((votes > 0) << shifts.astype(np.int64)).sum()))
-            yield pd.DataFrame({"doc_id": ids, "simhash16": pd.array(out, dtype="int32")})
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(_python_pass_width(spark))
-        .mapInPandas(gen, "doc_id bigint, simhash16 int")
+    positions and the sign of each bit's tally packs the fingerprint.
+    Bit k's tally is 2*set_k - n, so it is positive exactly when more
+    than half the hashes have bit k set — small-integer arithmetic,
+    exact in any engine. An explode → 16 conditional sums → groupBy form
+    would shuffle |docs| x |shingles| rows just to bring each document's
+    votes back together (they already sit together in the scan)."""
+    hv = F.col("_hv")
+    packed = sum(
+        F.when(2 * _bits_set(hv, k) > F.size(hv), 1 << k).otherwise(0)
+        for k in range(_SIMHASH_BITS)
+    )
+    return _shingle_hashes(spark, sf_dir).select(
+        "doc_id", packed.cast("int").alias("simhash16")
     )
 
 
 ORACLE_SIMHASH = f"""
 WITH shingled AS (SELECT doc_id, shingles AS sg FROM ({_ORACLE_SHINGLES})),
 ex AS (
-  SELECT doc_id, CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT) AS h
+  SELECT doc_id, {md5_bucket_sql('s')} AS h
   FROM shingled, unnest(sg) AS t(s)
 ),
 bits AS (

@@ -1,9 +1,9 @@
 """Cross-engine parity on NULL ``text`` for the shingle-based queries.
 
-The Spark Arrow passes map None→'' (fingerprint = md5(''), simhash
-voted from the single '' shingle); before the ``coalesce(text, '')``
-in ``_ORACLE_SHINGLES`` DuckDB produced shingles=[NULL] → fingerprint
-NULL and all -1 simhash votes. The production testdata has no null
+The shared tokenizer maps None→'' in both engines (fingerprint =
+md5(''), simhash voted from the single '' shingle); before the
+``coalesce(text, '')`` in ``_ORACLE_SHINGLES`` DuckDB produced
+shingles=[NULL] → fingerprint NULL and all -1 simhash votes. The production testdata has no null
 text, so the driver gate can't catch a regression here — this test
 runs the REAL queries and their REAL oracle SQL on a corpus that
 includes a null-text document and diffs the outputs.

@@ -73,6 +73,17 @@ def test_no_python_row_udfs(spark):
         assert "BatchEvalPython" not in plan, name
 
 
+def test_shingle_hash_queries_have_no_python_nodes(spark):
+    """fingerprint, simhash and dedup_minhash shingle, hash and band
+    with Spark built-ins over the one JVM tokenizer: no Python worker
+    node of any kind in the optimized or the physical plan."""
+    for name in ("fingerprint", "simhash", "dedup_minhash"):
+        qe = all_queries()[name].builder(spark, SF_DIR)._jdf.queryExecution()
+        for plan in (qe.optimizedPlan().toString(), qe.executedPlan().toString()):
+            for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+                assert node not in plan, (name, node)
+
+
 def test_anomaly_zscore_single_fact_shuffle(spark):
     """The fact table shuffles once (window partitioning reused by the
     stats join) — no second full-data exchange."""

@@ -121,20 +121,9 @@ def test_candidate_partition_balance(spark, scaled_sf):
     from pyspark.sql import functions as F
 
     from dbt_economic_indicators_eu_spark.operators.banding import candidate_pairs
-    from dbt_economic_indicators_eu_spark.queries.datapipe import (
-        _banded_minhash_gen,
-        _python_pass_width,
-    )
-    from dbt_economic_indicators_eu_spark.queries.common import load
+    from dbt_economic_indicators_eu_spark.queries.datapipe import _minhash_bands
 
-    docs = load(spark, scaled_sf, "documents")
-    banded = (
-        docs.select("doc_id", "text")
-        .repartition(_python_pass_width(spark))
-        .mapInPandas(
-            _banded_minhash_gen(), "doc_id bigint, band_idx int, band_hash string"
-        )
-    )
+    banded = _minhash_bands(spark, scaled_sf)
     cand = candidate_pairs(banded, ["band_idx", "band_hash"], "doc_id", "a", "b")
     dist = (
         cand.withColumn("pid", F.spark_partition_id())

@@ -1,9 +1,8 @@
-"""Exhaustive certification of the three-twin tokenizer contract
-(`normalized_words` / ORACLE_WORDS_EXPR / `_shingles_py` — see
-queries/datapipe.py's pinned tokenization block): the shingle MULTISET
-must be identical across the Spark Column, DuckDB SQL, and Python
-twins for EVERY Unicode codepoint, not just the curated nasty list in
-tests/test_twin_pins.py.
+"""Exhaustive certification of the two-twin tokenizer contract
+(`normalized_words` / ORACLE_WORDS_EXPR — see queries/datapipe.py's
+pinned tokenization block): the shingle MULTISET must be identical
+across the Spark Column and DuckDB SQL twins for EVERY Unicode
+codepoint, not just the curated nasty list in tests/test_twin_pins.py.
 
 Two layers, both deterministic (no flaky sampling):
 
@@ -22,8 +21,7 @@ so the exhaustive sweep stays cheap (~67k tiny rows).
 
 Comparison is sorted-list (order-free, multiplicity-preserving):
 DuckDB's list_distinct does not preserve first-seen order while
-array_distinct and the Python seen-set do — same convention as
-test_twin_pins.py.
+array_distinct does — same convention as test_twin_pins.py.
 """
 
 from __future__ import annotations
@@ -35,7 +33,6 @@ import pytest
 
 from dbt_economic_indicators_eu_spark.queries.datapipe import (
     _ORACLE_SHINGLES,
-    _shingles_of,
     _with_shingles,
 )
 
@@ -45,9 +42,9 @@ def duck():
     return duckdb.connect()
 
 
-def _three_way(spark, duck, texts):
-    """Shingle each text through all three twins; return the doc_ids
-    whose sorted shingle lists disagree, with the disagreeing values."""
+def _two_way(spark, duck, texts):
+    """Shingle each text through both twins; return the doc_ids whose
+    sorted shingle lists disagree, with the disagreeing values."""
     rows = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     jvm = {
@@ -58,12 +55,7 @@ def _three_way(spark, duck, texts):
     duck.register("documents", pdf)
     ddb = {int(r[0]): sorted(r[1]) for r in duck.execute(_ORACLE_SHINGLES).fetchall()}
     duck.unregister("documents")
-    py = {i: sorted(_shingles_of(t)) for i, t in rows}
-    return [
-        (i, repr(t), jvm[i], ddb[i], py[i])
-        for i, t in rows
-        if not (jvm[i] == ddb[i] == py[i])
-    ]
+    return [(i, repr(t), jvm[i], ddb[i]) for i, t in rows if jvm[i] != ddb[i]]
 
 
 def test_every_codepoint_tokenizes_identically(spark, duck):
@@ -78,7 +70,7 @@ def test_every_codepoint_tokenizes_identically(spark, duck):
         + list(range(0x10000, 0x110000, 257))
     )
     texts = [f"{chr(c)}Aa {chr(c)} bB{chr(c)}cc Dd{chr(c)}" for c in cps]
-    bad = _three_way(spark, duck, texts)
+    bad = _two_way(spark, duck, texts)
     assert not bad, (len(bad), bad[:5])
 
 
@@ -88,7 +80,7 @@ def test_every_codepoint_tokenizes_identically(spark, duck):
 # and astral chars — plus plain letters so real words form
 _NASTY_ALPHABET = (
     " \t\n\x0b\f\r"  # the pinned whitespace class
-    "\x00\x1c\x1d\x1e\x1f\x85"  # NUL + C0 seps + NEL (Python-strip bait)
+    "\x00\x1c\x1d\x1e\x1f\x85"  # NUL + C0 seps + NEL (Unicode-strip bait)
     "        　"  # Unicode spaces (DuckDB-trim bait)
     "​‍⁠﻿"  # zero-width / joiners / BOM
     "‪‮⁦⁩"  # bidi controls
@@ -110,5 +102,5 @@ def test_random_charset_combinations_match(spark, duck):
     for _ in range(2000):
         n = rng.choice((0, 1, 2, 3, 5, 8, 13, 21, 34, 60))
         texts.append("".join(rng.choice(_NASTY_ALPHABET) for _ in range(n)))
-    bad = _three_way(spark, duck, texts)
+    bad = _two_way(spark, duck, texts)
     assert not bad, (len(bad), bad[:5])

@@ -1,8 +1,8 @@
 """Direct unit pins of the cross-engine twin helpers, independent of
 any query: (1) ``money4_sum_r2`` / ``money4_sum_sql`` on ENGINEERED
 .xx5 half-boundary sums (the production gate only hits boundaries the
-testdata happens to contain); (2) the three tokenizer twins (Spark
-Column, DuckDB SQL, Python) on adversarial charset text — every char
+testdata happens to contain); (2) the two tokenizer twins (Spark
+Column, DuckDB SQL) on adversarial charset text — every char
 any engine's default trim/``\\s`` treats specially.
 
 These pin the CONTRACTS the parity architecture rests on, so a future
@@ -22,7 +22,6 @@ from dbt_economic_indicators_eu_spark.queries.common import (
 )
 from dbt_economic_indicators_eu_spark.queries.datapipe import (
     _ORACLE_SHINGLES,
-    _shingles_of,
     _with_shingles,
 )
 
@@ -85,7 +84,7 @@ def test_revised_price_boundary_parity(spark, duck):
 
 # every char class any engine's DEFAULT trim / \s handles differently:
 # explicit-class members, NBSP family (DuckDB one-arg trim), Unicode
-# line/para separators + C0 seps + NEL (Python bare .strip()), and
+# line/para separators + C0 seps + NEL (Unicode-aware strips), and
 # plain words — edges AND interiors
 _NASTY = [
     "plain words only",
@@ -105,10 +104,10 @@ _NASTY = [
 ]
 
 
-def test_tokenizer_three_twins_nasty_charset(spark, duck, tmp_path):
-    """Shingle sets from the JVM twin (_with_shingles), the DuckDB twin
-    (_ORACLE_SHINGLES), and the Python twin (_shingles_of) must be
-    IDENTICAL per document over the adversarial charset."""
+def test_tokenizer_twins_nasty_charset(spark, duck, tmp_path):
+    """Shingle sets from the JVM twin (_with_shingles) and the DuckDB
+    twin (_ORACLE_SHINGLES) must be IDENTICAL per document over the
+    adversarial charset."""
     rows = [(i, t) for i, t in enumerate(_NASTY)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     jvm = {
@@ -123,9 +122,8 @@ def test_tokenizer_three_twins_nasty_charset(spark, duck, tmp_path):
         for r in duck.execute(sql).fetchall()
     }
     duck.unregister("documents")
-    # NO set() here: all three twins dedup internally (seen-set /
-    # array_distinct / list_distinct), so compare WITH multiplicity —
-    # a dedup-removal edit to any single twin must fail this test
-    py = {i: sorted(_shingles_of(t)) for i, t in rows}
+    # NO set() here: both twins dedup internally (array_distinct /
+    # list_distinct), so compare WITH multiplicity — a dedup-removal
+    # edit to either twin must fail this test
     for i, _t in rows:
-        assert jvm[i] == ddb[i] == py[i], (i, repr(_t), jvm[i], ddb[i], py[i])
+        assert jvm[i] == ddb[i], (i, repr(_t), jvm[i], ddb[i])

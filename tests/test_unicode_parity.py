@@ -3,7 +3,7 @@ Greek (context-sensitive final sigma), Turkish dotted/dotless I,
 combining marks, emoji, and Devanagari, checked query-vs-oracle.
 
 Two divergence classes this guards (both found in round 4):
-- Tokenizer case folding: Java/Python lower() applies ICU full case
+- Tokenizer case folding: Java lower() applies full case
   mapping ('İ' -> 'i' + combining dot; word-final 'Σ' -> 'ς') while
   DuckDB's utf8proc applies simple folding — the shared tokenizer
   therefore folds ASCII [A-Z] ONLY (datapipe.ascii_fold and its twins).
@@ -42,11 +42,11 @@ _UNI = [
     # tokenize identically via the explicit whitespace class
     "vertical\x0btab\x0b\x0bsplit mixed \x0b ws",
     "tab\tnewline\nformfeed\fcarriage\rmix",
-    # trim-charset pins (round 5): the three tokenizer twins strip
-    # EXACTLY 0x20 at the edges (Spark trim / DuckDB trim(x, ' ') /
-    # Python .strip(' ')). NBSP-class chars (DuckDB's ONE-arg trim
-    # strips them) and U+2028 / \x1c (Python's bare .strip() strips
-    # them) must SURVIVE at text edges in all three engines.
+    # trim-charset pins (round 5): both tokenizer twins strip EXACTLY
+    # 0x20 at the edges (Spark trim / DuckDB trim(x, ' ')). NBSP-class
+    # chars (DuckDB's ONE-arg trim strips them) and U+2028 / \x1c
+    # (a Unicode-aware strip would eat them) must SURVIVE at text
+    # edges in both engines.
     " nbsp leading and trailing ",
     " line separator edge ",
     "\x1cfile separator edge\x1f",

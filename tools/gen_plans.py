@@ -53,9 +53,10 @@ HEADLINERS = [
     ),
     (
         "dedup_minhash",
-        "Band generation is one Arrow MapInPandas pass (shingle->md5->"
-        "minhash->band, no HOF layers, no posexplode); banding stays "
-        "group-then-pair — one Exchange on (band_idx, band_hash), no "
+        "Band generation is one narrow JVM projection over the widened "
+        "scan (shingles -> md5 prefix per shingle -> 8 array_min "
+        "permutation folds -> 4 band keys -> posexplode), with no Python "
+        "node; banding stays group-then-pair — one Exchange on (band_idx, band_hash), no "
         "self-join — and the verify join carries NO broadcast hint: the "
         "planner/AQE size check broadcasts the exploded candidate list "
         "only when it is actually small (as here), degrading to a "
@@ -149,9 +150,11 @@ HEADLINERS = [
     (
         "bloom_decontaminate",
         "The 2^16-bit bloom bitmask is built with a bit_or aggregate "
-        "(1024-row table) and met by the corpus only through "
-        "BroadcastHashJoins — prefilter survivors then exact-confirm "
-        "against the bounded benchmark set. The corpus never "
+        "and folded into ONE word -> mask map row, which the corpus "
+        "shingle stream meets on a single BroadcastNestedLoopJoin "
+        "(Cross, 1-row build side); two map lookups test the probe "
+        "bits, and the survivors exact-confirm against the bounded "
+        "benchmark set through a BroadcastHashJoin. The corpus never "
         "sort-merges; the result is exact (oracle = plain join).",
     ),
     (
