@@ -98,7 +98,9 @@ def _scratch_is_dead(path: str, pid: int) -> bool:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from dbt_economic_indicators_eu_spark.session import host_cpus
+
+    cpus = host_cpus()
     steal0, total0 = _cpu_jiffies()
 
     # Scratch space on tmpfs when available: streaming checkpoints /
@@ -608,6 +610,7 @@ def _oracle_pass(sf_dir: str, names: set[str], best: dict[str, float]) -> None:
     import duckdb
 
     from __spark_entry__ import oracle_sql
+    from dbt_economic_indicators_eu_spark.session import host_cpus
 
     if _ORACLE_CON is None:
         _ORACLE_CON = duckdb.connect()
@@ -615,7 +618,7 @@ def _oracle_pass(sf_dir: str, names: set[str], best: dict[str, float]) -> None:
         # Spark master string accepts): a raise here would be swallowed
         # by one_full_pass's blanket except EVERY pass and silently
         # drop ratio_vs_oracle from the payload
-        _cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        _cpus = host_cpus()
         _ORACLE_CON.execute(
             f"SET threads={int(_cpus) if _cpus.isdigit() else os.cpu_count() or 8}"
         )

@@ -28,6 +28,8 @@ Float-parity discipline (SURVEY.md §4), learned the hard way:
 
 from __future__ import annotations
 
+import os
+import re
 from dataclasses import dataclass
 from typing import Callable
 
@@ -290,6 +292,26 @@ def shuffle_partitions(spark: SparkSession, n: int):
         spark.conf.set(key, prev)
 
 
+def master_slots(master: str, default_parallelism: int) -> int:
+    """Executor slot count for a Spark master string: N for
+    ``local[N]``, the host's CPUs for ``local[*]``; for any other master
+    ``defaultParallelism`` is the executors' total core count."""
+    m = re.fullmatch(r"local\[(\*|\d+)\]", master)
+    if not m:
+        return default_parallelism
+    if m.group(1) == "*":
+        return os.cpu_count() or 1
+    return int(m.group(1))
+
+
+def executor_slots(spark: SparkSession) -> int:
+    """Tasks the session runs at once — one wave of a stage. In local
+    mode ``defaultParallelism`` may be conf-pinned to the shuffle width
+    (tiny-data sizing), so the slot count is read from the master."""
+    sc = spark.sparkContext
+    return master_slots(sc.master or "", sc.defaultParallelism)
+
+
 def widen_narrow_scan(df: DataFrame) -> DataFrame:
     """Fan a CPU-heavy stage out of an unsplittable scan.
 
@@ -306,20 +328,7 @@ def widen_narrow_scan(df: DataFrame) -> DataFrame:
     COMPUTE (the executor slots) when and only when the data cannot
     provide it."""
     spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    master = spark.sparkContext.master or ""
-    if master.startswith("local"):
-        # local mode: defaultParallelism may be conf-pinned to the
-        # shuffle width (tiny-data sizing); the COMPUTE width is the
-        # executor slot count from local[N]
-        import re as _re
-
-        m = _re.match(r"local\[(\*|\d+)\]", master)
-        if m:
-            import os as _os
-
-            slots = _os.cpu_count() or 1 if m.group(1) == "*" else int(m.group(1))
-            cores = max(cores, slots)
+    cores = max(spark.sparkContext.defaultParallelism, executor_slots(spark))
     try:
         n_files = len(df.inputFiles())
     except Exception:  # multi-source/derived frames: leave untouched

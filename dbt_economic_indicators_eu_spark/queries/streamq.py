@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..streaming import pipeline as streaming
-from .common import EVENTS_NORM_SQL, QueryDef, load
+from .common import EVENTS_NORM_SQL, QueryDef, executor_slots, load
 
 
 def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,9 +104,10 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming.stateful_user_totals(ev),
         "stream_stateful_totals",
         output_mode="update",
-        # Python-stateful: partitions bound worker parallelism (see
-        # run_available_now docstring); 16 measured 2.2s vs 2.9s at 4.
-        n_state_partitions=16,
+        # Python-stateful: every task pays a fixed Python worker set-up
+        # before its first row, so size the drain to one wave of tasks
+        # (see run_available_now)
+        n_state_partitions=executor_slots(spark),
     )
 
 

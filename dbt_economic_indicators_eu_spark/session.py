@@ -22,6 +22,12 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def host_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS`` when set, else the CPUs this process may
+    run on — the ``N`` of the default ``local[N]`` master."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "dbt-economic-indicators-eu-spark",
     master: str | None = None,
@@ -30,13 +36,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster
-    is configured; on a real cluster pass ``master=None`` and let
-    spark-submit decide.
+    ``master`` defaults to ``local[N]`` with ``N`` from ``host_cpus()``
+    when no cluster is configured; on a real cluster pass
+    ``master=None`` and let spark-submit decide.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
-        master = f"local[{cpus}]"
+        master = f"local[{host_cpus()}]"
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )

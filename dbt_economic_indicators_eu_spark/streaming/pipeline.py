@@ -496,10 +496,15 @@ def run_available_now(
     to parquet/Kafka instead.
 
     ``n_state_partitions``: JVM-stateful pipelines want FEW state
-    stores (fixed per-store cost dominates); Python-stateful ones
-    (``applyInPandasWithState``) want MORE — each partition is a
-    serial Arrow⇄pandas worker loop, so partitions bound the Python
-    parallelism. Callers override per pipeline."""
+    stores (fixed per-store cost dominates), sized to state volume.
+    Python-stateful ones (``applyInPandasWithState``) take exactly one
+    wave of executor slots (``queries.common.executor_slots``): each
+    partition is a serial Arrow⇄pandas worker loop, and each Python
+    task pays a fixed worker set-up before its first row (pyspark's
+    per-task ``importlib.invalidate_caches()`` re-reads every cached
+    zipimporter's directory), so partitions beyond the slot count only
+    queue more set-up, and fewer leave cores idle. Callers override
+    per pipeline."""
     import shutil
 
     if output_mode == "append" and _emits_only_on_watermark(stream_df):

@@ -38,6 +38,34 @@ def test_state_partitions_ctx_restores_conf(spark):
         assert spark.conf.get(key) == before
 
 
+def test_executor_slots_from_master(spark):
+    """One slot derivation: local[N] → N, local[*] → the host's CPUs,
+    any cluster master → defaultParallelism. widen_narrow_scan keeps
+    max(defaultParallelism, slots) as its width."""
+    import os
+
+    from dbt_economic_indicators_eu_spark.queries.common import (
+        executor_slots,
+        load,
+        master_slots,
+        widen_narrow_scan,
+    )
+
+    assert master_slots("local[3]", 7) == 3
+    assert master_slots("local[12]", 2) == 12
+    assert master_slots("local[*]", 2) == os.cpu_count()
+    assert master_slots("spark://host:7077", 48) == 48
+    assert master_slots("yarn", 96) == 96
+    assert master_slots("local-cluster[2,3,1024]", 6) == 6
+
+    assert spark.sparkContext.master == "local[4]"
+    assert executor_slots(spark) == 4
+    ev = load(spark, SF_A, "events")
+    assert len(ev.inputFiles()) < 4  # single-file scan: the widener fires
+    width = widen_narrow_scan(ev).rdd.getNumPartitions()
+    assert width == max(spark.sparkContext.defaultParallelism, 4)
+
+
 def test_dedup_bucket_udf_matches_jvm_fold(spark):
     """The numpy bucket assignment must agree bit-for-bit with the
     sequential-fold JVM expression it replaced (sign margins are huge —

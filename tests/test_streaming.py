@@ -101,6 +101,47 @@ def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
     assert final[200].total_value == 6.25
 
 
+def test_stateful_totals_drain_is_one_wave_of_slots(spark):
+    """The Python-stateful drain runs one task per executor slot: each
+    Python task pays a fixed worker set-up, so more state partitions
+    than slots queue set-up and fewer leave cores idle. Read the
+    partition count the engine actually used from the query's own
+    progress event, not from the conf the caller set."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from dbt_economic_indicators_eu_spark.queries.common import executor_slots
+    from dbt_economic_indicators_eu_spark.queries.streamq import q_stream_stateful_totals
+
+    seen = []
+
+    class Progress(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            if event.progress.name == "stream_stateful_totals":
+                seen.append(event.progress)
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        assert q_stream_stateful_totals(spark, SF_DIR).count() > 0
+        # the listener bus delivers asynchronously
+        deadline = time.monotonic() + 60
+        while not any(p.stateOperators for p in seen) and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    ops = [op for p in seen for op in p.stateOperators]
+    assert ops, "no progress event with a state operator was delivered"
+    assert {op.numShufflePartitions for op in ops} == {executor_slots(spark)}
+
+
 def test_event_time_windows_drop_null_ts(spark):
     """window()/session_window() silently drop NULL event-time rows
     (Spark's analyzer injects IsNotNull(ts) — a row with no event time

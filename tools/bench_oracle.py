@@ -24,12 +24,13 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from __spark_entry__ import oracle_sql  # noqa: E402
+from dbt_economic_indicators_eu_spark.session import host_cpus  # noqa: E402
 from dbt_economic_indicators_eu_spark.tableset import TABLES  # noqa: E402
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    threads = sys.argv[2] if len(sys.argv) > 2 else os.environ.get("SPARK_GRAFT_CPUS", "32")
+    threads = sys.argv[2] if len(sys.argv) > 2 else host_cpus()
 
     con = duckdb.connect()
     con.execute(f"SET threads={int(threads)}")
