@@ -610,7 +610,7 @@ def _oracle_pass(sf_dir: str, names: set[str], best: dict[str, float]) -> None:
     import duckdb
 
     from __spark_entry__ import oracle_sql
-    from dbt_economic_indicators_eu_spark.session import host_cpus
+    from dbt_economic_indicators_eu_spark.session import host_cpus, process_cpus
 
     if _ORACLE_CON is None:
         _ORACLE_CON = duckdb.connect()
@@ -620,7 +620,7 @@ def _oracle_pass(sf_dir: str, names: set[str], best: dict[str, float]) -> None:
         # drop ratio_vs_oracle from the payload
         _cpus = host_cpus()
         _ORACLE_CON.execute(
-            f"SET threads={int(_cpus) if _cpus.isdigit() else os.cpu_count() or 8}"
+            f"SET threads={int(_cpus) if _cpus.isdigit() else process_cpus()}"
         )
         from dbt_economic_indicators_eu_spark.queries.common import TABLES
 

@@ -28,13 +28,14 @@ Float-parity discipline (SURVEY.md §4), learned the hard way:
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import process_cpus
 
 # canonical list lives in the dependency-free ``tableset`` module so
 # the pyarrow-only tools (mutate_corpus) can share it without a
@@ -294,13 +295,14 @@ def shuffle_partitions(spark: SparkSession, n: int):
 
 def master_slots(master: str, default_parallelism: int) -> int:
     """Executor slot count for a Spark master string: N for
-    ``local[N]``, the host's CPUs for ``local[*]``; for any other master
-    ``defaultParallelism`` is the executors' total core count."""
+    ``local[N]``, ``session.process_cpus()`` for ``local[*]``; for any
+    other master ``defaultParallelism`` is the executors' total core
+    count."""
     m = re.fullmatch(r"local\[(\*|\d+)\]", master)
     if not m:
         return default_parallelism
     if m.group(1) == "*":
-        return os.cpu_count() or 1
+        return process_cpus()
     return int(m.group(1))
 
 

@@ -91,6 +91,16 @@ GROUP BY user_id, session_idx
 """
 
 
+# Widest Python-stateful drain that has been measured as the optimum.
+# Measured at sf0.1 at two slot counts only:
+#   local[4]:  1/2/4/8/16 partitions → 3.68/2.76/2.31/2.66/4.05 s (one wave best)
+#   local[32]: 8/16/32 partitions → 1.345/1.136/1.616 s (half a wave best)
+# so one wave of slots holds up to 4 slots and not at 32; the cap keeps
+# the 32-slot optimum until a sweep between the two says where the
+# rule stops.
+_PY_STATE_PARTITIONS_MAX = 16
+
+
 def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = streaming.events_stream(spark, sf_dir)
     # Arrow batch sizing (spark.sql.execution.arrow.maxRecordsPerBatch)
@@ -104,10 +114,9 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming.stateful_user_totals(ev),
         "stream_stateful_totals",
         output_mode="update",
-        # Python-stateful: every task pays a fixed Python worker set-up
-        # before its first row, so size the drain to one wave of tasks
-        # (see run_available_now)
-        n_state_partitions=executor_slots(spark),
+        # Python-stateful: one wave of executor slots, capped (see
+        # run_available_now and _PY_STATE_PARTITIONS_MAX)
+        n_state_partitions=min(executor_slots(spark), _PY_STATE_PARTITIONS_MAX),
     )
 
 

@@ -22,10 +22,18 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def process_cpus() -> int:
+    """The CPUs this process may run on (its affinity mask, so a
+    cpuset-restricted container counts its own CPUs, not the
+    machine's). The one host CPU count: ``host_cpus()`` and the
+    ``local[*]`` slot count both read it."""
+    return len(os.sched_getaffinity(0))
+
+
 def host_cpus() -> str:
-    """``$SPARK_GRAFT_CPUS`` when set, else the CPUs this process may
-    run on — the ``N`` of the default ``local[N]`` master."""
-    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    """``$SPARK_GRAFT_CPUS`` when set, else ``process_cpus()`` — the
+    ``N`` of the default ``local[N]`` master."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(process_cpus())
 
 
 def get_spark(

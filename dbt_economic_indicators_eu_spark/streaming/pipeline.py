@@ -497,14 +497,14 @@ def run_available_now(
 
     ``n_state_partitions``: JVM-stateful pipelines want FEW state
     stores (fixed per-store cost dominates), sized to state volume.
-    Python-stateful ones (``applyInPandasWithState``) take exactly one
-    wave of executor slots (``queries.common.executor_slots``): each
-    partition is a serial Arrow⇄pandas worker loop, and each Python
-    task pays a fixed worker set-up before its first row (pyspark's
-    per-task ``importlib.invalidate_caches()`` re-reads every cached
-    zipimporter's directory), so partitions beyond the slot count only
-    queue more set-up, and fewer leave cores idle. Callers override
-    per pipeline."""
+    Python-stateful ones (``applyInPandasWithState``) take one wave of
+    executor slots (``queries.common.executor_slots``), capped at the
+    widest measured optimum: each partition is a serial Arrow⇄pandas
+    worker loop, and each Python task pays a fixed worker set-up before
+    its first row (pyspark's per-task ``importlib.invalidate_caches()``
+    re-reads every cached zipimporter's directory). At 4 slots and
+    sf0.1 one wave measured fastest; at 32 slots half a wave beat a
+    full one, hence the cap. Callers override per pipeline."""
     import shutil
 
     if output_mode == "append" and _emits_only_on_watermark(stream_df):

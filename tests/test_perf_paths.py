@@ -39,7 +39,8 @@ def test_state_partitions_ctx_restores_conf(spark):
 
 
 def test_executor_slots_from_master(spark):
-    """One slot derivation: local[N] → N, local[*] → the host's CPUs,
+    """One slot derivation: local[N] → N, local[*] → the CPUs this
+    process may run on (the same count as the default master's N),
     any cluster master → defaultParallelism. widen_narrow_scan keeps
     max(defaultParallelism, slots) as its width."""
     import os
@@ -53,7 +54,7 @@ def test_executor_slots_from_master(spark):
 
     assert master_slots("local[3]", 7) == 3
     assert master_slots("local[12]", 2) == 12
-    assert master_slots("local[*]", 2) == os.cpu_count()
+    assert master_slots("local[*]", 2) == len(os.sched_getaffinity(0))
     assert master_slots("spark://host:7077", 48) == 48
     assert master_slots("yarn", 96) == 96
     assert master_slots("local-cluster[2,3,1024]", 6) == 6

@@ -102,9 +102,9 @@ def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
 
 
 def test_stateful_totals_drain_is_one_wave_of_slots(spark):
-    """The Python-stateful drain runs one task per executor slot: each
-    Python task pays a fixed worker set-up, so more state partitions
-    than slots queue set-up and fewer leave cores idle. Read the
+    """The Python-stateful drain runs one task per executor slot, up to
+    the cap: each Python task pays a fixed worker set-up, and one wave
+    measured fastest at 4 slots while 16 beat 32 at 32 slots. Read the
     partition count the engine actually used from the query's own
     progress event, not from the conf the caller set."""
     import time
@@ -112,7 +112,10 @@ def test_stateful_totals_drain_is_one_wave_of_slots(spark):
     from pyspark.sql.streaming import StreamingQueryListener
 
     from dbt_economic_indicators_eu_spark.queries.common import executor_slots
-    from dbt_economic_indicators_eu_spark.queries.streamq import q_stream_stateful_totals
+    from dbt_economic_indicators_eu_spark.queries.streamq import (
+        _PY_STATE_PARTITIONS_MAX,
+        q_stream_stateful_totals,
+    )
 
     seen = []
 
@@ -139,7 +142,8 @@ def test_stateful_totals_drain_is_one_wave_of_slots(spark):
         spark.streams.removeListener(listener)
     ops = [op for p in seen for op in p.stateOperators]
     assert ops, "no progress event with a state operator was delivered"
-    assert {op.numShufflePartitions for op in ops} == {executor_slots(spark)}
+    want = min(executor_slots(spark), _PY_STATE_PARTITIONS_MAX)
+    assert {op.numShufflePartitions for op in ops} == {want}
 
 
 def test_event_time_windows_drop_null_ts(spark):
