@@ -28,6 +28,9 @@ Float-parity discipline (SURVEY.md §4), learned the hard way:
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 import re
 from dataclasses import dataclass
 from typing import Callable
@@ -411,80 +414,39 @@ def _cached_builder(q: "QueryDef") -> Callable[[SparkSession, str], DataFrame]:
     return build
 
 
-# Verification-priority ordering. The correctness harness records
-# verdicts for a ~50-query prefix of dict order, so queries rotate each
-# round to keep every verdict fresh (two-round freshness invariant).
-# Round-13 rotation (r12-verdict task #1): (a) test_unique and
-# decontaminate LEAD — their code changed in round 12 AFTER the r12
-# rotation commit, so their only driver verdict predates the change;
-# (b) the rest of the r11-stale cohort (CORRECTNESS_r11 keys minus
-# CORRECTNESS_r12 keys, 46 more) so every query again carries an
-# r12-or-r13 verdict; (c) two r12-fresh round-13 optimization targets
-# (see the trailing block below) — the standing rule is that any query
-# whose code changes in-round must sit in the prefix IN THE CHANGING
-# COMMIT so rotation order can never race a later optimization.
-# 2 + 46 + 2 = exactly 50; enforced by tests/test_registry.py.
-_VERIFY_FIRST = (
-    # -- changed in r12 after the r12 rotation (driver must re-verdict) --
-    "test_unique",
-    "decontaminate",
-    # -- r11-stale cohort (latest verdict is one round old) --------------
-    "annual_agg",
-    "annual_summary",
-    "asof_join",
-    "bloom_decontaminate",
-    "case_bands",
-    "chunk_documents",
-    "completeness",
-    "contract_check",
-    "dedup_cluster",
-    "dedup_minhash",
-    "distinct_spine",
-    "fingerprint",
-    "freshness_check",
-    "incremental_upsert",
-    "knn_brute",
-    "knn_quantized",
-    "latest_per_entity",
-    "left_join_enrich",
-    "length_buckets",
-    "monthly_lag",
-    "pack_sequences",
-    "paragraph_dedup",
-    "pii_redact",
-    "range_join_agg",
-    "rank_in_year",
-    "region_share",
-    "registry_pipeline",
-    "repetition_stats",
-    "rolling_avg",
-    "scd2_snapshot",
-    "schema_test_suite",
-    "simhash",
-    "singular_consistency",
-    "staging_projection",
-    "stream_incremental",
-    "targeted_delete",
-    "test_range_nofuture",
-    "test_relationships",
-    "text_clean",
-    "text_stats",
-    "tfidf_topk",
-    "token_count",
-    "unigram_logprob",
-    "union_append",
-    "unit_test_mock",
-    "watermark_filter",
-    # -- round-13 optimization targets (re-verdict post-change) ----------
-    # dedup_embedding carries an r12 verdict but its code changed this
-    # round (probe-side widen), so it must re-verify in-round.
-    # stream_join and stream_stateful_totals were examined with
-    # measured NON-changes only (comment-level edits at most);
-    # stateful_totals keeps the second slot as this round's most
-    # re-measured streaming path.
-    "dedup_embedding",
-    "stream_stateful_totals",
-)
+# The driver contract module (and the CORRECTNESS_r*.json verdict
+# artifacts the driver writes beside it) sits at the repo root.
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def cumulative_correctness(root: str = _REPO_ROOT) -> tuple[list[str], dict[str, tuple[int, dict]]]:
+    """Read the driver's ``CORRECTNESS_r<N>.json`` artifacts in ``root``.
+
+    Returns the artifact file names in numeric round order (r100 after
+    r13), and for each query the latest round that recorded it with
+    that round's verdict row. No artifacts → ``([], {})``."""
+    rounds: list[tuple[int, str]] = []
+    for path in glob.glob(os.path.join(glob.escape(root), "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m:
+            rounds.append((int(m.group(1)), path))
+    rounds.sort()
+    latest: dict[str, tuple[int, dict]] = {}
+    for n, path in rounds:
+        with open(path) as f:
+            for name, row in json.load(f).items():
+                latest[name] = (n, row)
+    return [os.path.basename(p) for _, p in rounds], latest
+
+
+def _verify_order(names: list[str], root: str = _REPO_ROOT) -> list[str]:
+    """Verification order: the driver records verdicts for a 50-query
+    prefix of ``queries()``, so the stalest latest verdict goes first
+    (no verdict = round 0); the stable sort keeps module order on ties
+    and returns module order when no artifacts exist. With at most 100
+    queries every query then holds a verdict from the last two rounds."""
+    _, latest = cumulative_correctness(root)
+    return sorted(names, key=lambda n: latest.get(n, (0,))[0])
 
 
 def all_queries() -> dict[str, QueryDef]:
@@ -507,13 +469,10 @@ def all_queries() -> dict[str, QueryDef]:
     ):
         for q in mod.QUERIES:
             by_name[q.name] = q
-    out: dict[str, QueryDef] = {}
-    for name in _VERIFY_FIRST:
-        out[name] = by_name.pop(name)
-    out.update(by_name)
     # Expose plan-cached builders for pure queries (see QueryDef).
     from dataclasses import replace
 
     return {
-        name: replace(q, builder=_cached_builder(q)) for name, q in out.items()
+        name: replace(by_name[name], builder=_cached_builder(by_name[name]))
+        for name in _verify_order(list(by_name))
     }

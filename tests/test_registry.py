@@ -192,57 +192,65 @@ def test_selected_run_reads_stored_unselected_upstream(spark, tmp_path, threads)
     assert {r["k"] for r in out["mart"].collect()} == {"k1", "k2", "k3"}
 
 
-def test_verify_rotation_names_consistent():
-    """The _VERIFY_FIRST rotation must name real queries, with no
-    duplicates — a typo would KeyError all_queries() at driver time,
-    and a dup silently wastes one of the ~50 verification slots."""
-    from dbt_economic_indicators_eu_spark.queries.common import _VERIFY_FIRST, all_queries
-
-    names = all_queries()
-    assert len(set(_VERIFY_FIRST)) == len(_VERIFY_FIRST)
-    assert set(_VERIFY_FIRST) <= set(names)
-    # the driver records verdicts for EXACTLY a 50-query prefix — an
-    # over-long tuple silently drops its tail out of verification, a
-    # short one fills the remaining slots nondeterministically
-    assert len(_VERIFY_FIRST) == 50
-    # rotation order is the dict order the driver samples
-    assert list(names)[: len(_VERIFY_FIRST)] == list(_VERIFY_FIRST)
+_VERIFY_SLOTS = 50  # the driver records verdicts for this prefix of queries()
 
 
 def test_verify_rotation_covers_stale_cohort():
-    """Self-enforcing two-round freshness invariant: every query whose
-    latest driver verdict is one round stale (keys of the second-newest
-    CORRECTNESS artifact minus the newest's) must sit in the
-    _VERIFY_FIRST prefix, so after the coming round every query carries
-    a verdict from the last two rounds. Skips when fewer than two
-    artifacts exist (fresh clone)."""
-    import glob
-    import json
-    import os
-
-    import pytest
-
-    from dbt_economic_indicators_eu_spark.queries.common import _VERIFY_FIRST
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # numeric round sort: lexicographic would file r100 between r10 and
-    # r11 and silently check two outdated artifacts
-    arts = sorted(
-        glob.glob(os.path.join(root, "CORRECTNESS_r*.json")),
-        key=lambda p: int(os.path.basename(p)[len("CORRECTNESS_r"):-len(".json")]),
+    """Two-round freshness pin: every query whose latest driver verdict
+    is older than the newest CORRECTNESS artifact, or that has no
+    verdict, sits in the prefix the driver verifies next round."""
+    from dbt_economic_indicators_eu_spark.queries.common import (
+        all_queries,
+        cumulative_correctness,
     )
-    if len(arts) < 2:
-        pytest.skip("needs two driver verdict artifacts")
-    with open(arts[-2]) as f:
-        prev = set(json.load(f))
-    with open(arts[-1]) as f:
-        newest = set(json.load(f))
-    stale = prev - newest
-    missing = stale - set(_VERIFY_FIRST)
+
+    _, latest = cumulative_correctness()
+    newest = max((n for n, _ in latest.values()), default=0)
+    names = list(all_queries())
+    stale = {n for n in names if latest.get(n, (0,))[0] < newest}
+    missing = stale - set(names[:_VERIFY_SLOTS])
     assert not missing, (
         f"{len(missing)} stale queries outside the verification prefix "
         f"(would go >2 rounds unverified): {sorted(missing)}"
     )
+
+
+def test_verify_order_follows_new_artifacts(tmp_path):
+    """A new verdict artifact needs no hand edit: four simulated driver
+    rounds, each verifying the computed prefix, keep every query's
+    latest verdict within the last two rounds — including a query with
+    no verdict yet, while an artifact row for a deleted query is
+    ignored. Rounds sort numerically, and no artifacts → input order."""
+    import json
+    import os
+    import shutil
+
+    from dbt_economic_indicators_eu_spark.queries.common import (
+        _REPO_ROOT,
+        _verify_order,
+        all_queries,
+        cumulative_correctness,
+    )
+
+    names = list(all_queries()) + ["new_query"]
+    assert _verify_order(names, str(tmp_path)) == names
+
+    files, latest = cumulative_correctness()
+    for f in files:
+        shutil.copy(os.path.join(_REPO_ROOT, f), tmp_path)
+    newest = max(n for n, _ in latest.values())
+    for n in range(newest + 1, newest + 5):
+        prefix = _verify_order(names, str(tmp_path))[:_VERIFY_SLOTS]
+        rows = {q: {"rows_match": True} for q in prefix + ["deleted_query"]}
+        (tmp_path / f"CORRECTNESS_r{n}.json").write_text(json.dumps(rows))
+        _, latest = cumulative_correctness(str(tmp_path))
+        old = {q for q in names if latest.get(q, (0,))[0] < n - 1}
+        assert not old, f"r{n}: verdicts older than two rounds: {sorted(old)}"
+
+    (tmp_path / "CORRECTNESS_r100.json").write_text(json.dumps({names[0]: {}}))
+    files, latest = cumulative_correctness(str(tmp_path))
+    assert files[-1] == "CORRECTNESS_r100.json" and latest[names[0]][0] == 100
+    assert _verify_order(names, str(tmp_path))[-1] == names[0]
 
 
 def test_every_query_has_oracle_and_ops():

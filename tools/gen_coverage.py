@@ -3,43 +3,27 @@
 
 "Verified" is read from the CUMULATIVE CORRECTNESS_r*.json history the
 driver wrote — declaring oracle SQL is not verification. Each round the
-driver checks a 50-query prefix of the rotation order, so any single
-round's file under-covers; this report joins ALL rounds, takes each
-query's verdict from the LATEST round that recorded a row for it, and
-prints that round as provenance (`pass@r3`). Queries with no row in any
-round are `unchecked`, so the doc can never overstate what the driver
-actually compared.
+driver checks a 50-query prefix of ``queries()``, whose order is
+computed from these same artifacts (stalest verdict first), so any
+single round's file under-covers; this report joins ALL rounds, takes
+each query's verdict from the LATEST round that recorded a row for it,
+and prints that round as provenance (`pass@r3`). Queries with no row in
+any round are `unchecked`, so the doc can never overstate what the
+driver actually compared.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from dbt_economic_indicators_eu_spark.queries.common import all_queries  # noqa: E402
-
-
-def cumulative_correctness() -> tuple[list[str], dict[str, tuple[int, dict]]]:
-    """(round files used, query → (round, verdict row) from the latest
-    round containing that query)."""
-    rounds: list[tuple[int, str]] = []
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m:
-            rounds.append((int(m.group(1)), path))
-    rounds.sort()
-    latest: dict[str, tuple[int, dict]] = {}
-    for n, path in rounds:
-        with open(path) as f:
-            for name, row in json.load(f).items():
-                latest[name] = (n, row)
-    return [p.rsplit("/", 1)[-1] for _, p in rounds], latest
+from dbt_economic_indicators_eu_spark.queries.common import (  # noqa: E402
+    all_queries,
+    cumulative_correctness,
+)
 
 
 def verdict(name: str, oracle_declared: bool, latest: dict[str, tuple[int, dict]]) -> str:
