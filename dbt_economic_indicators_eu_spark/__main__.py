@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import argparse
 import datetime as dt
+import functools
 import os
 import sys
 
@@ -291,16 +292,6 @@ def cmd_snapshot(args, *, warn_vars=True) -> int:
     return cmd_run(args, materializations=("snapshot",), exclude=(), warn_vars=warn_vars)
 
 
-def _stored_schema(reg, ctx, name):
-    """Schema of a model's STORED relation when the artifact on disk is
-    rowless (no parquet footers — e.g. a vars-scoped run over an empty
-    slice) — delegated to materialize.run.stored_schema_for, the single
-    definition of the rowless read-back rule."""
-    from .materialize.run import stored_schema_for
-
-    return stored_schema_for(reg.get(name), ctx.ref(name))
-
-
 def cmd_test(args, *, warn_vars=True) -> int:
     """dbt test over all three layers the reference uses
     (README:343-348): GENERIC column tests (the yml declarations,
@@ -344,7 +335,8 @@ def cmd_test(args, *, warn_vars=True) -> int:
     # downstream plan may select columns that exist only in the stored
     # upstream (SCD2 bookkeeping, append_new_columns survivors) and
     # would fail analysis against a fresh rebuild's schema
-    from .materialize.run import make_stored_resolver, warehouse_base
+    from .materialize.incremental import open_stored
+    from .materialize.run import make_stored_resolver, stored_shape, warehouse_base
 
     base = warehouse_base(args.warehouse, args.target, args.schema)
     stored_resolver = make_stored_resolver(reg, spark, base)
@@ -378,33 +370,23 @@ def cmd_test(args, *, warn_vars=True) -> int:
     # its accumulated stored relation, not a single-batch recompute.
     ctx = reg.context(spark, vars=run_vars, stored_resolver=stored_resolver)
 
+    @functools.cache
     def resolve(name):
         """dbt test checks the MATERIALIZED relation: prefer the
         warehouse artifact a prior run/build wrote (a merge defect
         accumulated there must fail the test even though a fresh
         recompute would pass); views/unbuilt models fall back to
         ref-recompute, which is also dbt's behavior for views. The
-        path mirrors cmd_run's target/schema namespace policy.
-        A rowless artifact (e.g. a vars-scoped run over an empty
-        slice) has no parquet footers — read it with the STORED
-        relation's schema instead of crashing schema inference. For a
-        snapshot that schema is NOT the build plan's: scd2_merge
-        appends valid_from/valid_to/is_current (same derivation as
-        materialize/run's rowless read-back)."""
-        from .materialize.incremental import has_parquet_files
-
-        from .materialize.incremental import recover_interrupted_swap
-        from .materialize.run import read_stored
-
-        path = os.path.join(base, name)
-        # a crashed swap must resolve to the recovered relation, not
-        # fall through to a single-batch ref-recompute
-        recover_interrupted_swap(path)
-        if not os.path.isdir(path):
-            return None
-        if has_parquet_files(path):
-            return read_stored(spark, path)
-        return spark.read.schema(_stored_schema(reg, ctx, name)).parquet(path)
+        path mirrors cmd_run's target/schema namespace policy. A
+        rowless artifact (e.g. a vars-scoped run over an empty slice)
+        reads with its stored shape's schema. Memoized: a model with
+        several declarations is opened once per verb, which is safe
+        because nothing writes a model path during ``test`` (stored
+        failures land under dbt_test__audit)."""
+        return open_stored(
+            spark, os.path.join(base, name),
+            lambda: stored_shape(reg.get(name), ctx.ref(name)).schema,
+        )
 
     n_pass = n_total = 0
     ok = True
@@ -691,8 +673,8 @@ def cmd_docs(args) -> int:
     # refresh must not erase a schema a bound run already recorded),
     # else an empty mapping (honestly unknown, but iterable — a
     # consumer walking columns must not trip over null; ADVICE r6 #4).
-    from .materialize.incremental import has_parquet_files, recover_interrupted_swap
-    from .materialize.run import make_stored_resolver, read_stored, warehouse_base
+    from .materialize.incremental import open_stored
+    from .materialize.run import make_stored_resolver, stored_shape, warehouse_base
 
     base = warehouse_base(args.warehouse, args.target, args.schema)
     cpath = os.path.join(base, "catalog.json")
@@ -728,10 +710,9 @@ def cmd_docs(args) -> int:
             else None
         )
         for name in candidates:
-            p = os.path.join(base, name)
-            recover_interrupted_swap(p)  # crashed swap: catalog the recovered state
-            if has_parquet_files(p):
-                df = read_stored(spark, p)
+            # None here is a rowless relation: candidates are directories
+            df = open_stored(spark, os.path.join(base, name))
+            if df is not None:
                 catalog[name] = {
                     "columns": {
                         f.name: f.dataType.simpleString() for f in df.schema.fields
@@ -740,7 +721,7 @@ def cmd_docs(args) -> int:
                 }
             else:
                 if ctx is not None:
-                    schema = _stored_schema(reg, ctx, name)
+                    schema = stored_shape(reg.get(name), ctx.ref(name)).schema
                     columns = {
                         f.name: f.dataType.simpleString() for f in schema.fields
                     }

@@ -19,6 +19,11 @@ Plain-parquet strategy (no Delta in this environment):
    (Delta/Iceberg) — at cluster scale swap via metastore
    table-pointer flip instead.
 
+``open_stored`` is the one reader of a stored relation: the merge
+target here, the snapshot's prior state, the run read-back, the
+stored-relation resolver behind ``ref()`` and the CLI ``test``/``docs``
+verbs all open a model's directory through it.
+
 Scale posture: the anti-join shuffles on the unique key (uniform
 surrogate md5 → no skew); the incoming batch is typically small →
 broadcast it. Partition the target by a coarse time column so the
@@ -91,6 +96,45 @@ def recover_interrupted_swap(path: str) -> None:
             os.rename(old, path)
         if os.path.exists(old):
             shutil.rmtree(old)
+
+
+def open_stored(
+    spark: SparkSession, path: str, empty_schema=None
+) -> DataFrame | None:
+    """THE reader of a model's stored relation at ``path``; every
+    consumer opens it here, because each one re-implementing the read
+    is how a copy drifts and crashes on exactly the table it skipped a
+    step for. In order:
+
+    1. ``recover_interrupted_swap``: a missing path with a live
+       ``.old`` must read as the recovered relation. A reader that took
+       it for first-run would rebuild without history (a single-batch
+       recompute) and destroy both recovery copies on its own swap.
+    2. The ``has_parquet_files`` footer probe, not a bare exists(): a
+       rowless directory (an empty slice wrote no footers) has no
+       schema to infer and would crash UNABLE_TO_INFER_SCHEMA on every
+       later read. Only that case is routed around; any other read
+       failure (corrupt footer, IO, permissions) raises, since treating
+       a failing target as first-run would overwrite it with only the
+       incoming batch.
+    3. ``mergeSchema``: after an append_new_columns batch the
+       partition-scoped merge rewrites only the touched partitions, so
+       the table legitimately holds mixed footers. A single-footer
+       sample would hide the evolved column, and the next merge would
+       rewrite kept rows without its values. Footer merging costs
+       per-file metadata only (the same one job as a plain read); a
+       transactional format replaces it with a table schema at cluster
+       scale.
+    4. A rowless directory reads with ``empty_schema()`` when that
+       thunk is given (a typed empty relation), else gives ``None``,
+       as does a path that was never materialized.
+    """
+    recover_interrupted_swap(path)
+    if has_parquet_files(path):
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    if empty_schema is None or not os.path.isdir(path):
+        return None
+    return spark.read.schema(empty_schema()).parquet(path)
 
 
 def swap_into_place(writer, path: str) -> None:
@@ -192,31 +236,7 @@ def run_incremental(
     partitions' files are never rewritten. A monthly batch into a
     years-deep fact table costs O(batch partitions), not O(table).
     """
-    # finish any crashed swap FIRST: a missing target with a live .old
-    # must read as the old table, never as first-run (which would merge
-    # only the incoming batch — permanent loss of accumulated history)
-    recover_interrupted_swap(target_path)
-    existing = None
-    if os.path.exists(target_path):
-        # A rowless (e.g. first-run-on-empty-source) partitioned target
-        # has no parquet footers to infer a schema from — that specific
-        # case is a first run. Anything ELSE (corrupt footer, transient
-        # IO, permissions) must re-raise: swallowing it would treat a
-        # readable-but-failing target as first-run and the merge would
-        # overwrite it with only the incoming batch — silent loss of
-        # the full accumulated history. Probe for data files first so
-        # the no-footers case never reaches the reader at all.
-        if has_parquet_files(target_path):
-            # mergeSchema: after an append_new_columns batch, the
-            # partition-scoped write only rewrites TOUCHED partitions,
-            # so the table legitimately holds mixed footers — without
-            # schema merging the reader samples ONE footer and an
-            # old-schema sample would hide the evolved column, and the
-            # next merge would rewrite kept rows WITHOUT its values
-            # (silent column loss). Footer-merging cost is per-file
-            # metadata only; a transactional format (Delta/Iceberg)
-            # replaces it with a table schema at cluster scale.
-            existing = spark.read.option("mergeSchema", "true").parquet(target_path)
+    existing = open_stored(spark, target_path)
     if existing is None or partition_by is None:
         merged = merge_upsert(
             existing, incoming, unique_key, watermark_col, broadcast_incoming_keys

@@ -16,17 +16,14 @@ from __future__ import annotations
 
 import logging
 import os
+import threading
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import Context, Registry
-from .incremental import (
-    has_parquet_files,
-    recover_interrupted_swap,
-    run_incremental,
-    swap_into_place,
-)
+from .incremental import open_stored, run_incremental, swap_into_place
 from .snapshot import run_snapshot, scd2_merge
 
 logger = logging.getLogger(__name__)
@@ -130,44 +127,29 @@ def _materialize_one(
         assert model.unique_key and model.check_cols
         run_snapshot(spark, path, df, model.unique_key, list(model.check_cols), now)
     # a rowless materialization (e.g. project vars scoping the run to an
-    # empty slice) writes no parquet footers — read back with the
-    # STORED-RELATION schema so downstream refs see an empty,
-    # correctly-typed relation instead of UNABLE_TO_INFER_SCHEMA.
-    if has_parquet_files(path):
-        fresh = read_stored(spark, path)
-    else:
-        fresh = spark.read.schema(stored_schema_for(model, df)).parquet(path)
+    # empty slice) writes no parquet footers: read it back with the
+    # STORED-relation schema so downstream refs see an empty, typed
+    # relation instead of UNABLE_TO_INFER_SCHEMA
+    fresh = open_stored(spark, path, lambda: stored_shape(model, df).schema)
     with build_lock:
         ctx.set_relation(name, fresh)
     return fresh
 
 
-def stored_schema_for(model, build_df: DataFrame):
-    """THE schema of a model's STORED relation derived from its build
-    plan — shared by the rowless read-back here, the CLI test verb, and
-    catalog generation (one definition, or the SCD2-schema rule
-    drifts). For a snapshot that schema is NOT the build plan's:
-    scd2_merge appends valid_from/valid_to/is_current, which downstream
-    refs and schema tests select — derive it from the merge itself on
-    an empty slice (lazy plan construction, no job)."""
+def stored_shape(model, build_df: DataFrame) -> DataFrame:
+    """THE lazy frame shaped like a model's STORED relation, derived
+    from its build plan. The rowless read-back here, the CLI test and
+    docs verbs and the probe context's refs all take it from here (one
+    definition, or the SCD2-schema rule drifts). For a snapshot it is
+    NOT the build plan: scd2_merge appends valid_from/valid_to/
+    is_current, which downstream refs and schema tests select, so it
+    is the merge itself over an empty slice (lazy plan, no job)."""
     if model.materialization == "snapshot":
         return scd2_merge(
             None, build_df.limit(0), model.unique_key,
             list(model.check_cols), "1970-01-01 00:00:00",
-        ).schema
-    return build_df.schema
-
-
-def read_stored(spark: SparkSession, path: str) -> DataFrame:
-    """THE reader for stored relations (shared by the run read-back,
-    the stored resolver, the CLI test verb, and docs catalog): always
-    footer-merging. A partition-scoped incremental after an
-    append_new_columns batch legitimately holds mixed parquet footers
-    (only touched partitions rewrote) — a single-footer sample would
-    hide the evolved column from whoever reads the relation next, and
-    each consumer re-implementing the read is how one of them drifts
-    to a plain read and crashes on exactly that table."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
+        )
+    return build_df
 
 
 def make_stored_resolver(registry, spark, base, *, exclude: set[str] | None = None):
@@ -177,24 +159,15 @@ def make_stored_resolver(registry, spark, base, *, exclude: set[str] | None = No
     never drift. Views return None (a stored view is a stored QUERY;
     recomputing the plan is its read semantics), as do names in
     ``exclude`` (models materializing in-run arrive via set_relation)
-    and never-materialized paths (fall back to a fresh build)."""
+    and never-materialized or rowless paths (fall back to a fresh
+    build)."""
 
     def stored_resolver(name: str):
         if exclude is not None and name in exclude:
             return None
-        model = registry.get(name)
-        if model.materialization == "view":
+        if registry.get(name).materialization == "view":
             return None
-        path = os.path.join(base, name)
-        # finish any crashed swap BEFORE probing: a missing path with a
-        # live .old must resolve to the recovered relation, not read as
-        # never-materialized (which would silently rebuild a downstream
-        # against a single-batch recompute — the history-loss mode
-        # recover_interrupted_swap exists to prevent)
-        recover_interrupted_swap(path)
-        if has_parquet_files(path):
-            return read_stored(spark, path)
-        return None
+        return open_stored(spark, os.path.join(base, name))
 
     return stored_resolver
 
@@ -264,10 +237,11 @@ def run_models(
     whose upstreams have finished materialize concurrently from a
     thread pool. Spark supports concurrent job submission from multiple
     driver threads; the scheduler interleaves their stages. Semantics
-    are identical to the serial run — a model's plan is built only
-    after every upstream it refs has materialized (so ``ref`` resolves
-    to the STORED relation, dbt's contract), which the dependency-
-    ordered scheduler guarantees at any thread count.
+    are identical at any thread count (``threads <= 1`` is a pool of
+    one: the same scheduler, run serially) — a model's plan is built
+    only after every upstream it refs has materialized (so ``ref``
+    resolves to the STORED relation, dbt's contract). Models are
+    returned in selection order.
 
     ``vars`` are run-level project variables (reference
     ``dbt_project.yml:20-26``), resolved by models via ``ctx.var``.
@@ -279,8 +253,8 @@ def run_models(
     base = warehouse_base(warehouse, target, schema)
     os.makedirs(base, exist_ok=True)
     names = select if select is not None else list(registry.models)
-    # dedupe a repeated selection (order-preserving): the threaded
-    # scheduler would otherwise submit the same model twice
+    # dedupe a repeated selection (order-preserving): the scheduler
+    # would otherwise submit the same model twice
     # CONCURRENTLY — two overwrite writes racing on one table path
     names = list(dict.fromkeys(names))
 
@@ -305,61 +279,34 @@ def run_models(
             registry, spark, base, exclude=set(names)
         ),
     )
+
+    # One scheduler for every thread count: a model is submitted once
+    # every SELECTED upstream it waits on has materialized, so its plan
+    # (built inside _materialize_one) refs the STORED relation. Edges
+    # come from a probe build (Registry.dependency_graph's throwaway
+    # context: every selected plan built once to harvest refs, then
+    # discarded; its stored reads and source schema inference cost
+    # Spark jobs) only when they can change the schedule: a selection out of registry declaration order (a mart
+    # listed before its incremental upstream would otherwise build
+    # from a fresh single-batch recompute), or several models that
+    # could overlap. Otherwise the declaration-order chain is exact,
+    # since any subsequence of declaration order is topological; this
+    # covers a serial all-models run, the CLI's declaration-ordered
+    # lists at --threads 1, and every one-model run.
+    decl = {n: i for i, n in enumerate(registry.models)}
+    in_decl_order = all(
+        decl[a] < decl[b] for a, b in zip(names, names[1:]) if a in decl and b in decl
+    )
+    if not in_decl_order or (threads > 1 and len(names) > 1):
+        upstream = _selected_upstream_map(registry, spark, names, mocks, vars, base)
+    else:
+        upstream = {n: set(names[:i]) for i, n in enumerate(names)}
+
     out: dict[str, DataFrame] = {}
-
-    if threads <= 1:
-        import threading
-
-        lock = threading.Lock()  # uncontended in the serial path
-        # dependency-order a non-topological selection before running:
-        # a mart listed before its incremental upstream would silently
-        # build from a fresh single-batch recompute instead of the
-        # stored relation (the same contract the threaded scheduler
-        # enforces). A selection already in registry DECLARATION order
-        # (any subsequence of it is topological — this covers both the
-        # default all-models run and the CLI, which always passes an
-        # explicit list) skips the probe-build edge harvest.
-        decl = {n: i for i, n in enumerate(registry.models)}
-        in_decl_order = all(
-            decl[a] < decl[b] for a, b in zip(names, names[1:]) if a in decl and b in decl
-        )
-        if not in_decl_order and len(names) > 1:
-            upstream = _selected_upstream_map(registry, spark, names, mocks, vars, base)
-            ordered: list[str] = []
-            done_names: set[str] = set()
-            pending_names = list(names)  # given order = stable tie-break
-            while pending_names:
-                ready = [n for n in pending_names if upstream[n] <= done_names]
-                if not ready:  # cycle — ctx.ref would also raise
-                    raise RuntimeError(f"unschedulable models: {pending_names}")
-                for n in ready:
-                    pending_names.remove(n)
-                    ordered.append(n)
-                    done_names.add(n)
-            names = ordered
-        for name in names:
-            out[name] = _materialize_one(
-                ctx, spark, name, base, watermark_col, now, lock,
-                full_refresh=full_refresh,
-            )
-        return out
-
-    # -- concurrent DAG execution ------------------------------------
-    # Upstream edges come from Registry.dependency_graph's THROWAWAY
-    # context (plans built once purely to harvest refs — lazy,
-    # driver-side, no jobs — then discarded). The REAL context builds
-    # each model's plan only after its upstreams materialized,
-    # preserving stored-relation semantics; the probe build is the
-    # price of not having a static manifest to read edges from.
-    import threading
-    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-
-    upstream = _selected_upstream_map(registry, spark, names, mocks, vars, base)
-
     build_lock = threading.Lock()
     done: set[str] = set()
-    pending = list(names)  # registry order = stable tie-break
-    with ThreadPoolExecutor(max_workers=threads) as pool:
+    pending = list(names)  # given order = stable tie-break
+    with ThreadPoolExecutor(max_workers=max(1, threads)) as pool:
         running: dict = {}
         while pending or running:
             ready = [n for n in pending if upstream[n] <= done]
@@ -382,11 +329,10 @@ def run_models(
                 try:
                     out[n] = fut.result()
                 except BaseException:
-                    # stop-at-first-failure like the serial path:
-                    # cancel everything queued (in-flight writes — at
-                    # most threads-1 — drain; threads cannot be killed)
-                    # so no NEW model materializes downstream of a
-                    # failure
+                    # stop at the first failure: cancel everything
+                    # queued (in-flight writes — at most threads-1 —
+                    # drain; threads cannot be killed) so no NEW model
+                    # materializes downstream of a failure
                     for f in running:
                         f.cancel()
                     pool.shutdown(wait=True, cancel_futures=True)

@@ -31,7 +31,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .incremental import has_parquet_files, recover_interrupted_swap, swap_into_place
+from .incremental import open_stored, swap_into_place
 
 
 def _any_check_changed(check_cols: tuple[str, ...] | list[str]) -> Column:
@@ -129,19 +129,7 @@ def run_snapshot(
     check_cols: list[str],
     now,
 ) -> None:
-    # finish any crashed swap BEFORE the footer probe: a missing path
-    # with a live .old must read as the prior snapshot, never as
-    # first-run (which would rebuild without history and destroy both
-    # recovery copies on its own swap)
-    recover_interrupted_swap(snapshot_path)
-    # footer probe, not a bare exists(): a rowless prior snapshot (an
-    # empty source slice wrote a directory with no parquet data files)
-    # must read as first-run, not crash UNABLE_TO_INFER_SCHEMA forever
-    prev = (
-        spark.read.parquet(snapshot_path)
-        if has_parquet_files(snapshot_path)
-        else None
-    )
+    prev = open_stored(spark, snapshot_path)  # None: first run
     # fail fast on duplicate keys, like the now=None check: duplicates
     # fan out the full_outer join and compound multiple is_current
     # rows per key EVERY run — silent history corruption with no error

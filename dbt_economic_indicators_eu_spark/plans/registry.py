@@ -488,23 +488,16 @@ class Context:
             # accumulates append_new_columns from earlier batches — so
             # a downstream plan selecting those columns would fail
             # analysis during the harvest. Edges were already recorded
-            # by the build above; swap in the stored relation (or, for
-            # a not-yet-materialized snapshot, a lazy empty merge with
-            # exactly the stored schema — no job either way).
+            # by the build above; swap in the stored relation, or for
+            # a not-yet-materialized model its lazy stored shape.
+            from ..materialize.run import stored_shape
+
             stored = (
                 self._stored_resolver(name)
                 if self._stored_resolver is not None
                 else None
             )
-            if stored is not None:
-                df = stored
-            elif model.materialization == "snapshot":
-                from ..materialize.snapshot import scd2_merge
-
-                df = scd2_merge(
-                    None, df.limit(0), model.unique_key,
-                    list(model.check_cols), "1970-01-01 00:00:00",
-                )
+            df = stored if stored is not None else stored_shape(model, df)
         self._cache[f"m:{name}"] = df
         return df
 

@@ -665,6 +665,36 @@ def test_cli_test_checks_materialized_relation(spark, tmp_path, capsys):
     assert "FAIL" in out and "fct_economic_indicators" in out
 
 
+def test_cli_test_opens_each_stored_relation_once(spark, tmp_path, capsys, monkeypatch):
+    """`test` memoizes its stored-relation reader: a model with several
+    declarations (fct_economic_indicators has 5) is opened once per
+    verb, not once per declaration, and still passes."""
+    from collections import Counter
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    raw = str(tmp_path / "raw")
+    wh = str(tmp_path / "wh")
+    _write_raw(spark, raw)
+    args = ["--warehouse", wh, "--raw-dir", raw, "--now", "2024-03-01T00:00:00"]
+    assert main(["run", *args, "--select", "fct_economic_indicators"]) == 0
+    capsys.readouterr()
+
+    reads: Counter = Counter()
+    parquet = DataFrameReader.parquet
+
+    def counting(self, *paths, **kwargs):
+        reads.update(os.path.normpath(p) for p in paths)
+        return parquet(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    rc = main(["test", *args, "--select", "fct_economic_indicators"])
+    out = capsys.readouterr().out
+    assert rc == 0, out
+    assert out.count("PASS  fct_economic_indicators.") == 5, out
+    assert reads[os.path.join(wh, "fct_economic_indicators")] == 1, reads
+
+
 def test_cli_test_types(spark, tmp_path, capsys):
     """The reference README's three test layers (README:343-348):
     bare `test` runs generic + unit + singular; `test_type:` selectors

@@ -552,10 +552,15 @@ def test_stored_resolver_recovers_crashed_swap(spark, tmp_path):
     just the writer's own next run: a downstream-only run (or test/
     docs) resolving an upstream whose swap crashed between the renames
     must see the recovered relation — a None here would silently
-    rebuild the downstream against a single-batch recompute."""
+    rebuild the downstream against a single-batch recompute. The one
+    reader (open_stored) behind the resolver also covers the other
+    stored-relation states: missing, rowless, and mixed footers."""
     import os
     import shutil
 
+    from dbt_economic_indicators_eu_spark.materialize.incremental import (
+        open_stored,
+    )
     from dbt_economic_indicators_eu_spark.materialize.run import (
         make_stored_resolver,
     )
@@ -580,6 +585,41 @@ def test_stored_resolver_recovers_crashed_swap(spark, tmp_path):
     assert not os.path.exists(path + ".old")
     assert not os.path.exists(path + ".tmp")
     shutil.rmtree(path)
+
+    # never materialized: None, so the caller falls back to a build
+    assert open_stored(spark, path) is None
+    assert resolver("acc") is None
+
+    # a crashed swap read directly: the recovered relation
+    spark.createDataFrame([("k2", 2.0)], "k string, v double").write.parquet(
+        path + ".tmp"
+    )
+    os.makedirs(path + ".old")
+    got = open_stored(spark, path)
+    assert [r["k"] for r in got.collect()] == ["k2"]
+    assert not os.path.exists(path + ".old")
+    shutil.rmtree(path)
+
+    # rowless directory (no footers): a typed empty frame with a schema
+    # thunk, None without one
+    os.makedirs(os.path.join(path, "d=1"))
+    empty = open_stored(spark, path, lambda: "k string, v double")
+    assert empty.columns == ["k", "v"] and empty.count() == 0
+    assert open_stored(spark, path) is None
+    assert resolver("acc") is None
+    shutil.rmtree(path)
+
+    # mixed footers (a partition-scoped append_new_columns batch): the
+    # evolved column survives whichever footer would be sampled
+    spark.createDataFrame([("a", 1.0)], "k string, v double").write.parquet(
+        os.path.join(path, "d=1")
+    )
+    spark.createDataFrame([("b", 2.0, "new")], "k string, v double, c string").write.parquet(
+        os.path.join(path, "d=2")
+    )
+    mixed = open_stored(spark, path)
+    assert {(r["k"], r["c"]) for r in mixed.collect()} == {("a", None), ("b", "new")}
+    assert "c" in resolver("acc").columns
 
 
 def test_scd2_dup_guard_survives_key_named_count(spark, tmp_path):

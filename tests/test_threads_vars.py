@@ -399,6 +399,44 @@ def test_serial_select_is_dependency_ordered(spark, tmp_path):
     assert out["mart"].collect()[0][0] == 5  # 3 history + 2 new
 
 
+def test_probe_build_only_when_edges_can_change_the_schedule(spark, tmp_path):
+    """One scheduler for every thread count: edges are probe-harvested
+    (a throwaway build of every selected plan) only when they can
+    change the schedule. A one-model run at threads=4 and a
+    declaration-order run at threads=1 build each plan exactly once;
+    an out-of-order selection probes, runs dependency-ordered and
+    returns models in selection order."""
+    from collections import Counter
+
+    calls: Counter = Counter()
+    reg = Registry()
+
+    @reg.model("up", materialization="table")
+    def _up(ctx):
+        calls["up"] += 1
+        return ctx.spark.range(3)
+
+    @reg.model("down", materialization="table")
+    def _down(ctx):
+        calls["down"] += 1
+        return ctx.ref("up").selectExpr("id * 2 AS id")
+
+    wh = str(tmp_path / "wh")
+    run_models(reg, spark, wh, select=["up"], threads=4)
+    assert calls == {"up": 1}
+
+    calls.clear()
+    out = run_models(reg, spark, wh, select=["up", "down"], threads=1)
+    assert calls == {"up": 1, "down": 1}
+    assert sorted(r.id for r in out["down"].collect()) == [0, 2, 4]
+
+    calls.clear()
+    out = run_models(reg, spark, wh, select=["down", "up"], threads=1)
+    assert calls == {"up": 2, "down": 2}  # probe build + real build
+    assert list(out) == ["down", "up"]
+    assert sorted(r.id for r in out["down"].collect()) == [0, 2, 4]
+
+
 def test_vars_aware_selection_expansion(spark):
     """+mart ancestor expansion resolves conditional refs with the SAME
     vars the run will use: a var-gated upstream is selected when the

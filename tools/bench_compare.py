@@ -71,11 +71,7 @@ def _salvage_queries(tail: str) -> dict | None:
         if m.group(1)
         not in ("n", "rc", "cpus", "sf", "value", "oracle_value",
                 "ratio_vs_oracle", "host_steal_pct", "oracle_coverage",
-                "spark_covered_value", "queries",
-                # oracle-side payload scalars (tools/bench_oracle.py):
-                # salvaging an oracle wrapper tail must not inject
-                # these as phantom query rows
-                "coverage", "n_failed")
+                "spark_covered_value", "queries")
     )
     return {"queries": qs, "_salvaged": True} if qs else None
 
@@ -104,7 +100,7 @@ def main() -> int:
         # the -1.0 sentinel means the query RAISED in that run — a
         # working->broken transition is the regression this tool
         # exists to catch; never skip it silently. STRICTLY negative
-        # only: bench_oracle rounds to 3 decimals, so a legitimate
+        # only: bench.py rounds to 3 decimals, so a legitimate
         # sub-millisecond query lands as 0.0 — treating that as the
         # sentinel would report a healthy query as FAILED and mask a
         # real 0.0 -> slow regression as "fixed"
