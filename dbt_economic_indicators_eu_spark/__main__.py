@@ -16,10 +16,20 @@ carries over:
 (``raw_gdp.parquet`` etc. — the output of the reference's
 ``scripts/extract_eurostat.py``, schemas in FIXTURES.md §1).
 ``--target``/``--schema`` apply the dev/prod namespace policy
-(materialize/run.py:schema_name); ``--select`` limits to named models.
-``test`` compiles every declared column test (ModelDef.tests — the
-reference's yml test declarations) into ONE unioned Spark plan and
-exits non-zero on any violation, exactly like ``dbt test``.
+(materialize/run.py:schema_name); ``--select``/``--exclude`` take dbt's
+node selectors, resolved by one rule for every verb
+(``Invocation.selection``). ``test`` compiles every declared column
+test (ModelDef.tests — the reference's yml test declarations) into ONE
+unioned Spark plan and exits non-zero on any violation, exactly like
+``dbt test``. ``build`` runs seed, run, snapshot, test in that order,
+and its stages share one selection: the run stage materializes the
+selected non-snapshot models, the snapshot stage the selected
+snapshots, and the test stage tests the whole selection.
+
+Each command resolves once: ``--vars`` and the clock, the registry,
+the session, the stored-relation resolver and the dependency graph
+(harvested only for a graph selector or the docs manifest's edges);
+each raw source is read once.
 """
 
 from __future__ import annotations
@@ -73,7 +83,7 @@ def _coerce_now_var(value) -> dt.datetime:
     raise SystemExit(f"--vars now must be an ISO timestamp string, got {value!r}")
 
 
-def _resolve_clock(args_now, run_vars: dict):
+def _resolve_clock(args_now, run_vars: dict) -> None:
     """ONE clock per run: ``--now`` and a ``now`` var are the same
     injectable clock (snapshot valid_from/valid_to, the Python-model
     ports' scored_at/forecast_generated_at, source freshness).
@@ -88,104 +98,109 @@ def _resolve_clock(args_now, run_vars: dict):
                 f"{run_vars['now'].isoformat()}: one clock per run — pass "
                 "either flag, or the same value in both"
             )
-        return run_vars["now"]
-    if args_now is not None:
+    elif args_now is not None:
         run_vars["now"] = args_now
-    return args_now
 
 
-def _warn_unknown_vars(reg, run_vars: dict) -> None:
+def _warn_unknown_vars(args) -> None:
     """dbt leaves unconsumed vars inert; since round 7 the staging
     filter activates only on its three declared keys (ADVICE r6 #1), so
     a typo'd key no longer silently scopes the DAG — but it also does
     nothing, which deserves a loud hint. ``now`` is the engine's
     injectable clock (snapshots + Python-model ports)."""
-    known = set(reg.project_vars) | {"now"}
-    unknown = sorted(set(run_vars) - known)
+    known = set(args.reg.project_vars) | {"now"}
+    unknown = sorted(set(args.run_vars) - known)
     if unknown:
         print(f"WARNING  unknown --vars keys (no model consumes them): {unknown}")
 
 
 def _registry(raw_dir: str | None):
+    """The model registry with the raw sources bound to ``raw_dir``.
+    Each loader reads its parquet once per registry, i.e. once per
+    command, however many stages and probe contexts ask: no verb
+    writes under ``--raw-dir``, and the next command builds a new
+    registry, so it sees fresh files."""
     from .models.econ import build_registry
 
     reg = build_registry()
     if raw_dir is not None:
         for name in RAW_SOURCES:
             path = os.path.join(raw_dir, f"{name}.parquet")
-            reg.source(name, lambda s, p=path: s.read.parquet(p))
+            reg.source(name, functools.cache(lambda s, p=path: s.read.parquet(p)))
     return reg
 
 
-def _spark(args):
-    from .session import get_spark
+class Invocation(argparse.Namespace):
+    """One CLI command: the parsed flags plus what the command resolves
+    ONCE, however many stages it runs — the parsed ``--vars``
+    (``run_vars``, set by main after the clock check), the registry,
+    the session, the warehouse base, the stored-relation resolver and
+    the dependency graph. Everything but ``run_vars`` is built on first
+    use, so a command that needs no session never starts one."""
 
-    return get_spark(master=args.master)
+    @functools.cached_property
+    def reg(self):
+        return _registry(self.raw_dir)
 
+    @functools.cached_property
+    def spark(self):
+        from .session import get_spark
 
-def _excluded_names(reg, args, spark, run_vars, stored_resolver=None) -> set:
-    """dbt ``--exclude``: the same graph-selector syntax as
-    ``--select`` (names, +/graph operators, tag:), subtracted from the
-    selection. expand_selection defers the (expensive) dependency-graph
-    probe harvest until a token actually carries a graph operator, so
-    plain names and tags never pay for it — and session-less callers
-    pass ``spark=None``. Warehouse-aware callers pass the run's
-    ``stored_resolver`` so graph probes analyze against stored
-    relations (see expand_selection)."""
-    tokens = getattr(args, "exclude_nodes", None)
-    if not tokens:
-        return set()
-    return set(
-        reg.expand_selection(
-            spark, list(tokens), vars=run_vars, stored_resolver=stored_resolver
+        return get_spark(master=self.master)
+
+    @functools.cached_property
+    def base(self) -> str:
+        from .materialize.run import warehouse_base
+
+        return warehouse_base(self.warehouse, self.target, self.schema)
+
+    @functools.cached_property
+    def stored_resolver(self):
+        """Refs of written models resolve to their STORED relations
+        (the resolver the run itself uses): a downstream plan may select
+        columns that exist only in the warehouse (SCD2 bookkeeping,
+        append_new_columns survivors) and would fail analysis against a
+        fresh rebuild's schema. It reads at call time, so one resolver
+        serves a build's stages before and after its writes."""
+        from .materialize.run import make_stored_resolver
+
+        return make_stored_resolver(self.reg, self.spark, self.base)
+
+    @functools.cached_property
+    def graph(self) -> dict[str, set]:
+        """model → direct upstreams, harvested once per command with the
+        run's vars and stored resolver (so a vars-conditional ref gives
+        the edge the run takes)."""
+        from .plans.registry import RegistryError
+
+        if self.raw_dir is None:
+            raise RegistryError(
+                "graph selectors (+) need --raw-dir: the dependency graph "
+                "is harvested from bound sources"
+            )
+        return self.reg.dependency_graph(
+            self.spark, vars=self.run_vars, stored_resolver=self.stored_resolver
         )
-    )
 
+    def selection(self, select) -> list[str] | None:
+        """THE dbt ``--select``/``--exclude`` rule, for every verb: the
+        nodes (models in declaration order, then sources) the ``select``
+        tokens choose — every node when there are none — minus what the
+        ``--exclude`` tokens choose, with the same syntax. None when
+        neither is given (unscoped). Only a graph operator harvests the
+        graph, and only once per command."""
+        exclude = self.exclude_nodes or []
+        if not select and not exclude:
+            return None
+        expand = functools.partial(self.reg.expand_selection, graph=lambda: self.graph)
+        names = expand(select) if select else [*self.reg.models, *self.reg.sources]
+        dropped = set(expand(exclude))
+        return [n for n in names if n not in dropped]
 
-def _model_names(
-    reg, args, spark, *, materializations=None, exclude=("snapshot",), exclude_always=()
-):
-    run_vars = _parse_vars(getattr(args, "vars", None))
-    # graph selectors probe-analyze against STORED relations (same
-    # resolver the run itself uses): a downstream plan may select
-    # columns that exist only in the warehouse (SCD2 bookkeeping,
-    # append_new_columns survivors) and would fail analysis against a
-    # fresh rebuild's schema — cmd_test got this fix first; run/build/
-    # snapshot/compile share it here
-    resolver = None
-    wh = getattr(args, "warehouse", None)
-    if wh is not None:
-        from .materialize.run import make_stored_resolver, warehouse_base
-
-        base = warehouse_base(
-            wh, getattr(args, "target", "prod"), getattr(args, "schema", None)
-        )
-        resolver = make_stored_resolver(reg, spark, base)
-    if args.select:
-        # dbt graph selectors: name, +name (ancestors), name+ (descendants)
-        names = reg.expand_selection(
-            spark, list(args.select), vars=run_vars, stored_resolver=resolver
-        )
-    else:
-        names = list(reg.models)
-    excluded = _excluded_names(reg, args, spark, run_vars, stored_resolver=resolver)
-    names = [n for n in names if n not in excluded]
-    out = []
-    for n in names:
-        if n not in reg.models:  # sources can't be "run"
-            continue
-        m = reg.get(n)
-        if materializations is not None and m.materialization not in materializations:
-            continue
-        if args.select is None and m.materialization in exclude:
-            continue
-        # build's run stage: snapshots run in the dedicated snapshot
-        # stage that follows — materializing them here too would merge
-        # twice with two different auto-filled clocks
-        if m.materialization in exclude_always:
-            continue
-        out.append(n)
-    return out
+    def models_in(self, selection) -> list[str]:
+        """The models of a ``selection`` (sources can't be run or
+        listed), in declaration order; every model when unscoped."""
+        return [n for n in self.reg.models if selection is None or n in selection]
 
 
 def cmd_ls(args) -> int:
@@ -193,48 +208,8 @@ def cmd_ls(args) -> int:
     and tag: selectors resolve without a SparkSession; +/graph
     operators need the dependency graph, hence bound sources
     (--raw-dir)."""
-    from .plans.registry import RegistryError
-
-    reg = _registry(args.raw_dir)
-    select = list(args.select or [])
-    exclude = list(getattr(args, "exclude_nodes", None) or [])
-    run_vars = _parse_vars(getattr(args, "vars", None))
-    names = list(reg.models)
-    if select or exclude:
-        try:
-            if any("+" in t for t in select + exclude):
-                if args.raw_dir is None:
-                    print(
-                        "ERROR  graph selectors (+) in ls need --raw-dir "
-                        "for the dependency graph"
-                    )
-                    return 1
-                spark = _spark(args)
-                if select:
-                    names = [
-                        n
-                        for n in reg.expand_selection(spark, select, vars=run_vars)
-                        if n in reg.models
-                    ]
-                excluded = (
-                    set(reg.expand_selection(spark, exclude, vars=run_vars))
-                    if exclude
-                    else set()
-                )
-            else:
-                # session-less: plain names / tag: never need the graph
-                if select:
-                    chosen = set(reg.expand_selection(None, select))
-                    names = [n for n in names if n in chosen]
-                excluded = (
-                    set(reg.expand_selection(None, exclude)) if exclude else set()
-                )
-        except RegistryError as e:
-            print(f"ERROR  {e}")
-            return 1
-        names = [n for n in names if n not in excluded]
-    for name in names:
-        m = reg.get(name)
+    for name in args.models_in(args.selection(args.select)):
+        m = args.reg.get(name)
         tags = f" tags={','.join(m.tags)}" if m.tags else ""
         print(f"{name}  [{m.materialization}]  tests={len(m.tests)}{tags}")
     return 0
@@ -243,56 +218,64 @@ def cmd_ls(args) -> int:
 def cmd_seed(args) -> int:
     from .models.econ import load_seed
 
-    spark = _spark(args)
     out = os.path.join(args.warehouse, "country_metadata")
-    load_seed(spark).write.mode("overwrite").parquet(out)
+    load_seed(args.spark).write.mode("overwrite").parquet(out)
     print(f"seeded country_metadata -> {out}")
     return 0
 
 
-def cmd_run(
-    args, *, materializations=None, exclude=("snapshot",), exclude_always=(),
-    warn_vars=True,
-) -> int:
+def _materialize(args, names: list[str]) -> None:
+    """Materialize ``names`` (the run and snapshot stages)."""
     from .materialize.run import run_models
 
-    reg = _registry(args.raw_dir)
-    spark = _spark(args)
-    names = _model_names(
-        reg, args, spark,
-        materializations=materializations, exclude=exclude,
-        exclude_always=exclude_always,
-    )
-    run_vars = _parse_vars(args.vars)
-    if warn_vars:
-        _warn_unknown_vars(reg, run_vars)
-    now = _resolve_clock(args.now, run_vars)
+    reg = args.reg
+    now = args.run_vars.get("now")
     if now is None and any(reg.get(n).materialization == "snapshot" for n in names):
         # snapshots need a concrete clock for valid_from/valid_to;
         # --now pins it for reproducible runs
         now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     built = run_models(
         reg,
-        spark,
+        args.spark,
         args.warehouse,
         select=names,
         now=now,
         target=args.target,
         schema=args.schema,
         threads=args.threads,
-        vars=run_vars,
-        full_refresh=getattr(args, "full_refresh", False),
+        vars=args.run_vars,
+        full_refresh=args.full_refresh,
     )
     for name in built:
         print(f"ran {name}  [{reg.get(name).materialization}]")
+
+
+def cmd_run(args) -> int:
+    """dbt run: the selected models. Bare ``run`` (no --select) skips
+    snapshots, which the ``snapshot`` verb owns; an explicit --select
+    runs what it names."""
+    _warn_unknown_vars(args)
+    names = args.models_in(args.selection(args.select))
+    _materialize(args, [
+        n for n in names
+        if args.select or args.reg.get(n).materialization != "snapshot"
+    ])
     return 0
 
 
-def cmd_snapshot(args, *, warn_vars=True) -> int:
-    return cmd_run(args, materializations=("snapshot",), exclude=(), warn_vars=warn_vars)
+def cmd_snapshot(args) -> int:
+    _warn_unknown_vars(args)
+    names = args.models_in(args.selection(args.select))
+    _materialize(args, [
+        n for n in names if args.reg.get(n).materialization == "snapshot"
+    ])
+    return 0
 
 
-def cmd_test(args, *, warn_vars=True) -> int:
+TEST_TYPES = frozenset({"generic", "unit", "singular"})
+
+
+def cmd_test(args) -> int:
     """dbt test over all three layers the reference uses
     (README:343-348): GENERIC column tests (the yml declarations,
     compiled to one unioned plan), UNIT tests (the dbt 1.8
@@ -301,66 +284,35 @@ def cmd_test(args, *, warn_vars=True) -> int:
     dbt's ``test_type:unit|generic|singular`` tokens to run one layer,
     and model/graph selectors to scope the generic layer; default runs
     everything, exactly like bare ``dbt test``."""
-    import shutil
-
-    from .testing.schedule import run_schema_tests
-
-    reg = _registry(args.raw_dir)
-    spark = _spark(args)
-    run_vars = _parse_vars(args.vars)
-    # same one-clock contract as run/build: --now is accepted here too
-    # (views/unbuilt models ref-recompute through this context, and the
-    # port models read ctx.var("now")), so a conflicting pair must
-    # error and a flag-only clock must reach the context vars
-    _resolve_clock(args.now, run_vars)
-    raw_select = list(args.select or [])
-    type_tokens = {
-        t.split(":", 1)[1] for t in raw_select if t.startswith("test_type:")
-    }
-    unknown_types = type_tokens - {"generic", "unit", "singular"}
+    tokens = list(args.select or [])
+    type_tokens = {t.split(":", 1)[1] for t in tokens if t.startswith("test_type:")}
+    unknown_types = type_tokens - TEST_TYPES
     if unknown_types:
         print(f"ERROR  unknown test_type selector(s): {sorted(unknown_types)}")
         return 1
-    model_tokens = [t for t in raw_select if not t.startswith("test_type:")]
+    _warn_unknown_vars(args)
     # dbt selector semantics: no tokens at all = every layer; test_type
     # tokens pick layers; model tokens scope WITHIN each selected layer
     # (a test belongs to the node(s) it attaches to — generic tests to
     # their declaring model, unit tests to their model-under-test, and
     # singular tests to the models they ref: dbt's eager indirect
     # selection runs a singular test when any of its parents is
-    # selected — ADVICE r6 #2).
-    run_types = type_tokens or {"generic", "unit", "singular"}
-    # the warehouse-aware resolver is built BEFORE selection so graph
-    # selectors (+name) probe-analyze against stored relations — a
-    # downstream plan may select columns that exist only in the stored
-    # upstream (SCD2 bookkeeping, append_new_columns survivors) and
-    # would fail analysis against a fresh rebuild's schema
+    # selected — ADVICE r6 #2). Sources stay selectable, so their
+    # declared tests run unless excluded themselves.
+    select = args.selection([t for t in tokens if not t.startswith("test_type:")])
+    return _test(args, select, type_tokens or TEST_TYPES)
+
+
+def _test(args, select: list[str] | None, run_types) -> int:
+    """Run the ``run_types`` test layers over ``select`` (None =
+    unscoped); exit status 1 on any failure."""
+    import shutil
+
     from .materialize.incremental import open_stored
-    from .materialize.run import make_stored_resolver, stored_shape, warehouse_base
+    from .materialize.run import stored_shape
+    from .testing.schedule import run_schema_tests
 
-    base = warehouse_base(args.warehouse, args.target, args.schema)
-    stored_resolver = make_stored_resolver(reg, spark, base)
-    select = (
-        reg.expand_selection(
-            spark, model_tokens, vars=run_vars, stored_resolver=stored_resolver
-        )
-        if model_tokens
-        else None
-    )
-    excluded = _excluded_names(
-        reg, args, spark, run_vars, stored_resolver=stored_resolver
-    )
-    if excluded:
-        # dbt --exclude: subtract from the selection (or from the full
-        # node set when nothing was selected); sources stay selectable
-        # so their declared tests still run unless excluded themselves
-        base_names = (
-            select if select is not None else list(reg.models) + list(reg.sources)
-        )
-        select = [n for n in base_names if n not in excluded]
-    if warn_vars:
-        _warn_unknown_vars(reg, run_vars)
-
+    reg, spark, base = args.reg, args.spark, args.base
     # same vars as the run that built the warehouse: views/unbuilt
     # models ref-recompute through this context, and mixing an
     # unscoped recompute with vars-scoped artifacts would test
@@ -368,7 +320,7 @@ def cmd_test(args, *, warn_vars=True) -> int:
     # resolves refs to WRITTEN upstreams from the warehouse (dbt ref
     # semantics): a view under test that refs an incremental must see
     # its accumulated stored relation, not a single-batch recompute.
-    ctx = reg.context(spark, vars=run_vars, stored_resolver=stored_resolver)
+    ctx = reg.context(spark, vars=args.run_vars, stored_resolver=args.stored_resolver)
 
     @functools.cache
     def resolve(name):
@@ -391,7 +343,7 @@ def cmd_test(args, *, warn_vars=True) -> int:
     n_pass = n_total = 0
     ok = True
 
-    store = getattr(args, "store_failures", False)
+    store = args.store_failures
     audit_base = os.path.join(base, "dbt_test__audit")
     # dbt drops/recreates each EXECUTED test's audit relation; a scoped
     # `--store-failures` run must not delete violation relations for
@@ -509,74 +461,12 @@ def cmd_docs(args) -> int:
     from .models.docs import DOC_BLOCKS, MODEL_DOCS, SOURCE_DOCS, SOURCE_GROUP_DOC
     from .models.semantic import METRICS
 
-    reg = _registry(args.raw_dir)
-    run_vars = _parse_vars(args.vars)
-    _resolve_clock(args.now, run_vars)  # one clock: conflict-checked here too
-    _warn_unknown_vars(reg, run_vars)
-    deps: dict[str, list[str]] = {}
-    spark = None
-    _doc_resolver = None
-    if args.raw_dir is not None:
-        spark = _spark(args)
-        # probes resolve against stored relations, like run/test: a
-        # model selecting a stored-only column (SCD2 bookkeeping,
-        # append_new_columns survivors) must not fail the edge harvest
-        from .materialize.run import make_stored_resolver, warehouse_base
-
-        _doc_resolver = make_stored_resolver(
-            reg, spark, warehouse_base(args.warehouse, args.target, args.schema)
-        )
-        # same vars the run would use: a vars-conditional ref must
-        # document the edge the run will actually take
-        deps = {
-            k: sorted(v)
-            for k, v in reg.dependency_graph(
-                spark, vars=run_vars, stored_resolver=_doc_resolver
-            ).items()
-        }
-    names = list(reg.models)
-    if args.select:
-        if args.raw_dir is not None:
-            from .plans.registry import RegistryError
-
-            try:
-                expanded = reg.expand_selection(
-                    spark, list(args.select), vars=run_vars,
-                    stored_resolver=_doc_resolver,
-                )
-            except RegistryError as e:
-                print(f"ERROR  {e}")
-                return 1
-            names = [n for n in expanded if n in reg.models]
-        else:  # no bound sources -> no graph; plain name filter
-            unknown = [n for n in args.select if n not in reg.models]
-            if unknown:
-                print(f"ERROR  unknown models in --select: {unknown}")
-                return 1
-            names = list(args.select)
-    if getattr(args, "exclude_nodes", None):
-        from .plans.registry import RegistryError
-
-        try:
-            if args.raw_dir is not None:
-                excluded = _excluded_names(
-                    reg, args, spark, run_vars, stored_resolver=_doc_resolver
-                )
-            else:
-                # no graph without bound sources: names and tag: still
-                # resolve (and unknown tokens still error — a silently
-                # ignored exclude would emit an unpruned manifest);
-                # graph operators genuinely need the dependency graph
-                bad = [t for t in args.exclude_nodes if "+" in t]
-                if bad:
-                    print(f"ERROR  graph selectors in --exclude need --raw-dir: {bad}")
-                    return 1
-                excluded = set(reg.expand_selection(None, list(args.exclude_nodes)))
-        except RegistryError as e:
-            print(f"ERROR  {e}")
-            return 1
-        names = [n for n in names if n not in excluded]
-    emitted = set(names)
+    reg = args.reg
+    _warn_unknown_vars(args)
+    # the same graph the selection expands over; without bound sources
+    # the manifest ships without edges
+    deps = args.graph if args.raw_dir is not None else {}
+    emitted = set(args.models_in(args.selection(args.select)))
 
     def model_node(name, m):
         doc = MODEL_DOCS.get(name, {})
@@ -601,7 +491,7 @@ def cmd_docs(args) -> int:
             # a lineage consumer resolving depends_on against the
             # manifest must never hit a dangling reference
             "depends_on": [
-                d for d in deps.get(name, [])
+                d for d in sorted(deps.get(name, ()))
                 if d in emitted or d in reg.sources
             ],
         }
@@ -629,7 +519,7 @@ def cmd_docs(args) -> int:
         # JSON, so clocks go back out as ISO strings
         "vars": {
             k: v.isoformat() if isinstance(v, dt.datetime) else v
-            for k, v in {**reg.project_vars, **run_vars}.items()
+            for k, v in {**reg.project_vars, **args.run_vars}.items()
         },
         # reusable dbt doc blocks (reference docs/overview.md)
         "docs": DOC_BLOCKS,
@@ -674,9 +564,9 @@ def cmd_docs(args) -> int:
     # else an empty mapping (honestly unknown, but iterable — a
     # consumer walking columns must not trip over null; ADVICE r6 #4).
     from .materialize.incremental import open_stored
-    from .materialize.run import make_stored_resolver, stored_shape, warehouse_base
+    from .materialize.run import stored_shape
 
-    base = warehouse_base(args.warehouse, args.target, args.schema)
+    base = args.base
     cpath = os.path.join(base, "catalog.json")
     previous: dict = {}
     # read-side legacy fallback: catalogs written before the
@@ -695,17 +585,14 @@ def cmd_docs(args) -> int:
     catalog: dict = {}
     candidates = [n for n in reg.models if os.path.isdir(os.path.join(base, n))]
     if candidates:
-        spark = _spark(args)  # get_spark memoizes; cheap if already up
+        spark = args.spark
         # the schema-derivation context resolves refs to STORED
         # relations like cmd_test's does (ADVICE r6 #4): a rowless
         # model whose plan refs an incremental with accumulated
         # append_new_columns must derive the accumulated schema, not a
         # single-batch recompute (which could even fail analysis)
         ctx = (
-            reg.context(
-                spark, vars=run_vars,
-                stored_resolver=make_stored_resolver(reg, spark, base),
-            )
+            reg.context(spark, vars=args.run_vars, stored_resolver=args.stored_resolver)
             if args.raw_dir is not None
             else None
         )
@@ -740,14 +627,9 @@ def cmd_compile(args) -> int:
     model's OPTIMIZED Catalyst plan (what the reference shows as
     compiled SQL, this engine shows as the logical plan Catalyst will
     execute)."""
-    reg = _registry(args.raw_dir)
-    spark = _spark(args)
-    run_vars = _parse_vars(args.vars)
-    _resolve_clock(args.now, run_vars)  # one clock: conflict-checked here too
-    _warn_unknown_vars(reg, run_vars)
-    ctx = reg.context(spark, vars=run_vars)
-    names = _model_names(reg, args, spark, exclude=())
-    for name in names:
+    _warn_unknown_vars(args)
+    ctx = args.reg.context(args.spark, vars=args.run_vars)
+    for name in args.models_in(args.selection(args.select)):
         df = ctx.ref(name)
         print(f"-- model: {name}")
         print(df._jdf.queryExecution().optimizedPlan().toString())
@@ -757,13 +639,12 @@ def cmd_compile(args) -> int:
 def cmd_source_freshness(args) -> int:
     from .testing.schedule import source_freshness_report
 
-    reg = _registry(args.raw_dir)
-    spark = _spark(args)
-    run_vars = _parse_vars(args.vars)
-    now = _resolve_clock(args.now, run_vars) or dt.datetime.now(
-        dt.timezone.utc
-    ).replace(tzinfo=None)
-    rows = source_freshness_report(reg, reg.context(spark), now).collect()
+    now = args.run_vars.get("now") or dt.datetime.now(dt.timezone.utc).replace(
+        tzinfo=None
+    )
+    rows = source_freshness_report(
+        args.reg, args.reg.context(args.spark), now
+    ).collect()
     if not rows:
         # dbt errors when no source declares freshness; exiting 0 with
         # empty output would let a CI gate pass while monitoring
@@ -781,28 +662,26 @@ def cmd_source_freshness(args) -> int:
 
 
 def cmd_build(args) -> int:
-    # dbt build = seed + run + snapshot + test over the selected graph.
-    # Materializations run BEFORE tests (dbt's DAG order: a test on a
-    # snapshot model must see the materialized relation with its
-    # validity columns, not a ref-recompute), and a failed stage
-    # short-circuits — testing a stale warehouse after a failed run
-    # masks the original failure with misleading FAIL rows.
-    # validate --vars AND the clock pair BEFORE the seed stage writes
-    # anything: malformed JSON or a conflicting --now / vars-now must
-    # abort with zero warehouse mutations, not after the seed overwrite
-    # (the run stage — first vars-aware stage — then warns about
-    # unknown keys once per build)
-    _resolve_clock(args.now, _parse_vars(args.vars))
-    rc = cmd_seed(args)
-    if rc:
-        return rc
-    rc = cmd_run(args, exclude_always=("snapshot",))
-    if rc:
-        return rc
-    rc = cmd_snapshot(args, warn_vars=False)
-    if rc:
-        return rc
-    return cmd_test(args, warn_vars=False)
+    """dbt build: seed, run, snapshot, test, over ONE selection.
+    Materializations run BEFORE tests (dbt's DAG order: a test on a
+    snapshot model must see the materialized relation with its
+    validity columns, not a ref-recompute), and a failed stage raises
+    before the next starts — testing a stale warehouse after a failed
+    run masks the original failure with misleading FAIL rows.
+    Snapshots materialize only in the snapshot stage: running them in
+    the run stage too would merge twice with two different auto-filled
+    clocks. The test stage tests the whole selection, sources
+    included. main has validated --vars and the clock pair, and the
+    selection is resolved here, so a bad selector aborts before the
+    seed stage writes anything."""
+    _warn_unknown_vars(args)
+    select = args.selection(args.select)
+    models = args.models_in(select)
+    snapshots = [n for n in models if args.reg.get(n).materialization == "snapshot"]
+    cmd_seed(args)
+    _materialize(args, [n for n in models if n not in snapshots])
+    _materialize(args, snapshots)
+    return _test(args, select, TEST_TYPES)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -861,12 +740,12 @@ def main(argv: list[str] | None = None) -> int:
             "test's violation rows as audit relations under "
             "<warehouse base>/dbt_test__audit/",
         )
-    args = p.parse_args(argv)
+    args = p.parse_args(argv, namespace=Invocation())
     # one-clock contract, enforced for EVERY verb before dispatch: a
-    # conflicting --now / vars-now pair never runs anything (the verbs
-    # re-parse vars themselves; this validation-only pass discards the
-    # propagated dict)
-    _resolve_clock(args.now, _parse_vars(args.vars))
+    # malformed --vars or a conflicting --now / vars-now pair never
+    # runs anything; the verbs read the resolved vars from here
+    args.run_vars = _parse_vars(args.vars)
+    _resolve_clock(args.now, args.run_vars)
     from .plans.registry import RegistryError
 
     try:

@@ -296,12 +296,8 @@ class Registry:
 
     def expand_selection(
         self,
-        spark: SparkSession | None,
         tokens: list[str],
-        *,
-        mocks: dict[str, DataFrame] | None = None,
-        vars: dict | None = None,
-        stored_resolver=None,
+        graph: Callable[[], dict[str, set]] | None = None,
     ) -> list[str]:
         """dbt graph selectors: ``name``, ``+name`` (with ancestors),
         ``name+`` (with descendants), ``+name+``, and ``tag:<tag>``
@@ -311,48 +307,39 @@ class Registry:
         descendants, as dbt expands them).
         Names may be models or sources. Returns matching models in
         registry declaration order (already topological), then matching
-        sources. ``mocks``/``vars`` must mirror the run configuration:
-        a ref gated on ``ctx.var(...)`` resolves during the edge
-        harvest exactly as the real run will, so ancestor selection
-        and the run agree on the graph. ``stored_resolver`` likewise:
-        a warehouse-aware caller passes the same resolver the run
-        uses, so the probe harvest can analyze plans that select
-        stored-only columns (SCD2 bookkeeping, append_new_columns
-        survivors) instead of failing on a fresh rebuild's schema.
+        sources.
 
-        ``spark`` may be None for plain-name / ``tag:`` selections —
-        the dependency-graph harvest is only needed (and a session
-        only required) when a token carries a graph operator, so
-        session-less callers (``ls`` without ``--raw-dir``) share this
-        one implementation instead of re-implementing token parsing."""
-        # The edge harvest probe-builds EVERY model's plan (py4j-
-        # measurable) — defer it until a token actually uses a graph
-        # operator; plain names and tag: selections never pay it.
+        ``graph`` returns the dependency graph (``dependency_graph``'s
+        model → direct upstreams). It is called only when a token
+        carries a graph operator: the harvest probe-builds EVERY
+        model's plan, so plain names and ``tag:`` selections never pay
+        for it, and a caller without bound sources passes None. The
+        caller builds it with the run's ``vars`` and stored resolver,
+        so ancestor selection and the run agree on the graph (a ref
+        gated on ``ctx.var(...)``; a plan selecting stored-only
+        columns), and can share one harvest across several calls."""
         deps: dict[str, set] | None = None
         children: dict[str, set] = {}
 
-        def graph(tok: str) -> dict[str, set]:
+        def edges(tok: str) -> dict[str, set]:
             nonlocal deps
             if deps is None:
-                if spark is None:
+                if graph is None:
                     raise RegistryError(
                         f"graph selector {tok!r} needs the dependency "
                         "graph (a SparkSession with bound sources)"
                     )
-                deps = self.dependency_graph(
-                    spark, mocks=mocks, vars=vars,
-                    stored_resolver=stored_resolver,
-                )
+                deps = graph()
                 for m, ups in deps.items():
                     for u in ups:
                         children.setdefault(u, set()).add(m)
             return deps
 
-        def walk(start: str, edges: dict[str, set]) -> set:
+        def walk(start: str, adjacent: dict[str, set]) -> set:
             out, stack = set(), [start]
             while stack:
                 n = stack.pop()
-                for nxt in edges.get(n, ()):
+                for nxt in adjacent.get(n, ()):
                     if nxt not in out:
                         out.add(nxt)
                         stack.append(nxt)
@@ -379,9 +366,9 @@ class Registry:
             chosen.update(targets)
             for name in targets:
                 if up:
-                    chosen |= walk(name, graph(tok))
+                    chosen |= walk(name, edges(tok))
                 if down:
-                    graph(tok)  # populates children
+                    edges(tok)  # populates children
                     chosen |= walk(name, children)
         # order-preserving dedupe: a name shared by a model AND a
         # source would otherwise appear twice, and per-name consumers

@@ -343,6 +343,14 @@ def test_cli_docs_manifest(spark, tmp_path):
         ["docs", "--warehouse", wh3, "--raw-dir", raw, "--select", "nope"]
     ) == 1
     assert main(["docs", "--warehouse", wh3, "--select", "nope"]) == 1
+    # without --raw-dir, --select takes the same tokens as ls and
+    # --exclude do: tag: resolves, graph operators still need the graph
+    assert main(["docs", "--warehouse", wh3, "--select", "tag:marts"]) == 0
+    m3b = json.load(open(os.path.join(wh3, "manifest.json")))
+    assert set(m3b["models"]) == {
+        "dim_country", "fct_economic_indicators", "rpt_annual_economic_summary",
+    }
+    assert main(["docs", "--warehouse", wh3, "--exclude", "+dim_country"]) == 1
 
     # catalog.json: the WAREHOUSE side — materialized relations only,
     # with actual column types and row counts from what a run wrote
@@ -693,6 +701,56 @@ def test_cli_test_opens_each_stored_relation_once(spark, tmp_path, capsys, monke
     assert rc == 0, out
     assert out.count("PASS  fct_economic_indicators.") == 5, out
     assert reads[os.path.join(wh, "fct_economic_indicators")] == 1, reads
+
+
+def test_cli_build_resolves_once(spark, tmp_path, capsys, monkeypatch):
+    """A command is one invocation: `build`'s stages share one selection
+    and one dependency-graph harvest for it (run_models' schedule probe
+    is the only other), and each raw source is read once across every
+    stage and probe context. `ls` and `docs` with tag: selectors and no
+    --raw-dir never start a session."""
+    from collections import Counter
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from dbt_economic_indicators_eu_spark import session
+    from dbt_economic_indicators_eu_spark.plans.registry import Registry
+
+    raw = str(tmp_path / "raw")
+    wh = str(tmp_path / "wh")
+    _write_raw(spark, raw)
+    reads: Counter = Counter()
+    harvests = []
+    parquet, dependency_graph = DataFrameReader.parquet, Registry.dependency_graph
+
+    def counting_parquet(self, *paths, **kwargs):
+        reads.update(os.path.normpath(p) for p in paths)
+        return parquet(self, *paths, **kwargs)
+
+    def counting_graph(self, *args, **kwargs):
+        harvests.append(kwargs.get("select"))
+        return dependency_graph(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+    monkeypatch.setattr(Registry, "dependency_graph", counting_graph)
+    rc = main(["build", "--warehouse", wh, "--raw-dir", raw,
+               "--now", "2024-03-01T00:00:00", "--select", "stg_eurostat__gdp+"])
+    out = capsys.readouterr().out
+    assert rc == 0, out
+    assert len(harvests) <= 2, harvests
+    raw_reads = {p: n for p, n in reads.items() if p.startswith(raw)}
+    assert raw_reads == {
+        os.path.join(raw, f"{name}.parquet"): 1
+        for name in ("raw_gdp", "raw_unemployment", "raw_inflation", "raw_population")
+    }, raw_reads
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    assert main(["ls", "--select", "tag:marts"]) == 0
+    assert main(["docs", "--warehouse", str(tmp_path / "docs"),
+                 "--select", "tag:marts"]) == 0
 
 
 def test_cli_test_types(spark, tmp_path, capsys):

@@ -5,6 +5,7 @@ materializations (view/table/incremental/snapshot end-to-end)."""
 from __future__ import annotations
 
 import datetime as dt
+import functools
 
 import pytest
 from pyspark.sql import functions as F
@@ -275,7 +276,7 @@ def test_expand_selection_dedupes_shared_model_source_name(spark):
     def dual(ctx):
         return spark.range(2).toDF("id")
 
-    assert reg.expand_selection(spark, ["dual"]) == ["dual"]
+    assert reg.expand_selection(["dual"]) == ["dual"]
 
 
 def test_namespaced_mocks_target_one_side(spark):
@@ -325,16 +326,17 @@ def test_plain_selection_skips_edge_harvest(spark, monkeypatch):
         raise AssertionError("dependency_graph called for a plain selection")
 
     monkeypatch.setattr(reg, "dependency_graph", boom)
-    assert reg.expand_selection(spark, ["b"]) == ["b"]
-    assert reg.expand_selection(spark, ["tag:t1"]) == ["a"]
+    graph = functools.partial(reg.dependency_graph, spark)
+    assert reg.expand_selection(["b"], graph) == ["b"]
+    assert reg.expand_selection(["tag:t1"], graph) == ["a"]
     with pytest.raises(AssertionError, match="plain selection"):
-        reg.expand_selection(spark, ["+b"])
+        reg.expand_selection(["+b"], graph)
 
 
 def test_expand_selection_sessionless_plain_tokens(spark):
-    """Plain names and tag: selectors resolve with spark=None (the ls
+    """Plain names and tag: selectors resolve with no graph (the ls
     verb without --raw-dir shares the one implementation instead of
-    re-implementing token parsing); a graph operator without a session
+    re-implementing token parsing); a graph operator without a graph
     raises a clear RegistryError, not an AttributeError."""
     reg = Registry()
 
@@ -346,13 +348,13 @@ def test_expand_selection_sessionless_plain_tokens(spark):
     def b(ctx):
         return ctx.ref("a")
 
-    assert reg.expand_selection(None, ["b", "tag:t1"]) == ["a", "b"]
+    assert reg.expand_selection(["b", "tag:t1"]) == ["a", "b"]
     with pytest.raises(RegistryError, match="dependency graph"):
-        reg.expand_selection(None, ["+b"])
+        reg.expand_selection(["+b"])
     with pytest.raises(RegistryError, match="unknown model or source"):
-        reg.expand_selection(None, ["nope"])
+        reg.expand_selection(["nope"])
     with pytest.raises(RegistryError, match="no model carries tag"):
-        reg.expand_selection(None, ["tag:nope"])
+        reg.expand_selection(["tag:nope"])
 
 
 def test_expand_selection_tag_graph_operators(spark):
@@ -375,9 +377,10 @@ def test_expand_selection_tag_graph_operators(spark):
     def down(ctx):
         return ctx.ref("mid")
 
-    assert reg.expand_selection(spark, ["+tag:hot"]) == ["up", "mid", "raw"]
-    assert reg.expand_selection(spark, ["tag:hot+"]) == ["mid", "down"]
-    assert reg.expand_selection(spark, ["+tag:hot+"]) == [
+    graph = functools.partial(reg.dependency_graph, spark)
+    assert reg.expand_selection(["+tag:hot"], graph) == ["up", "mid", "raw"]
+    assert reg.expand_selection(["tag:hot+"], graph) == ["mid", "down"]
+    assert reg.expand_selection(["+tag:hot+"], graph) == [
         "up", "mid", "down", "raw",
     ]
 
@@ -408,7 +411,7 @@ def test_expand_selection_graph_probe_uses_stored_resolver(spark):
         return stored if name == "acc" else None
 
     with pytest.raises(Exception, match="evolved|UNRESOLVED"):
-        reg.expand_selection(spark, ["+reader"])
+        reg.expand_selection(["+reader"], lambda: reg.dependency_graph(spark))
     assert reg.expand_selection(
-        spark, ["+reader"], stored_resolver=resolver
+        ["+reader"], lambda: reg.dependency_graph(spark, stored_resolver=resolver)
     ) == ["acc", "reader", "raw"]

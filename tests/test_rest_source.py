@@ -137,19 +137,21 @@ def test_decode_jsonstat_real_api_shape_matches_reference_algorithm(spark):
 
 def test_cli_build_runs_snapshot_once(spark, tmp_path, monkeypatch):
     """build --select including a snapshot must materialize it exactly
-    once (in the snapshot stage) — the run stage previously merged it
-    too, with a different auto-filled clock."""
+    once (in the snapshot stage) — a run stage that merged it too would
+    do so with a different auto-filled clock."""
+    from collections import Counter
+
     from dbt_economic_indicators_eu_spark import __main__ as cli
+    from dbt_economic_indicators_eu_spark.materialize import run as run_mod
 
-    calls = []
-    orig = cli.cmd_run
+    snapshots: Counter = Counter()
+    orig = run_mod.run_snapshot
 
-    def spy(args, **kw):
-        rc = orig(args, **kw)
-        calls.append((kw, rc))
-        return rc
+    def spy(spark, path, *args, **kwargs):
+        snapshots[os.path.basename(path)] += 1
+        return orig(spark, path, *args, **kwargs)
 
-    monkeypatch.setattr(cli, "cmd_run", spy)
+    monkeypatch.setattr(run_mod, "run_snapshot", spy)
     raw = str(tmp_path / "raw")
     wh = str(tmp_path / "wh")
     import tests.test_cli as tc
@@ -160,9 +162,7 @@ def test_cli_build_runs_snapshot_once(spark, tmp_path, monkeypatch):
          "2024-03-01T00:00:00", "--select", "stg_eurostat__gdp+"]
     )
     assert rc == 0
-    # run stage excluded snapshots; snapshot stage ran them
-    run_kw = [kw for kw, _ in calls if kw.get("exclude_always")]
-    assert run_kw and run_kw[0]["exclude_always"] == ("snapshot",)
+    assert snapshots == {"snap_gdp_history": 1}
 
 
 def test_cli_source_freshness_without_sources_errors(tmp_path, capsys):

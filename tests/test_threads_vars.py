@@ -453,8 +453,10 @@ def test_vars_aware_selection_expansion(spark):
             return ctx.ref("extra")
         return ctx.spark.range(2)
 
-    with_var = reg.expand_selection(spark, ["+mart"], vars={"include_extra": True})
-    without = reg.expand_selection(spark, ["+mart"])
+    with_var = reg.expand_selection(
+        ["+mart"], lambda: reg.dependency_graph(spark, vars={"include_extra": True})
+    )
+    without = reg.expand_selection(["+mart"], lambda: reg.dependency_graph(spark))
     assert "extra" in with_var
     assert "extra" not in without
 
