@@ -155,16 +155,39 @@ class Invocation(argparse.Namespace):
         return warehouse_base(self.warehouse, self.target, self.schema)
 
     @functools.cached_property
+    def relations(self) -> dict:
+        """model → the stored relation this command opened or wrote
+        (dbt's relation cache). A write replaces its entry, so no stage
+        holds a relation whose files a swap deleted."""
+        return {}
+
+    def stored_relation(self, name: str, ctx=None):
+        """``open_stored`` on a model's directory, once per command. Given
+        a context, a rowless directory reads typed by the model's stored
+        shape; else it gives None, as an unbuilt model does (retried)."""
+        from .materialize.incremental import open_stored
+        from .materialize.run import stored_shape
+
+        if self.relations.get(name) is None:
+            self.relations[name] = open_stored(
+                self.spark, os.path.join(self.base, name),
+                None if ctx is None else (
+                    lambda: stored_shape(self.reg.get(name), ctx.ref(name)).schema
+                ),
+            )
+        return self.relations[name]
+
+    @functools.cached_property
     def stored_resolver(self):
         """Refs of written models resolve to their STORED relations
         (the resolver the run itself uses): a downstream plan may select
         columns that exist only in the warehouse (SCD2 bookkeeping,
         append_new_columns survivors) and would fail analysis against a
-        fresh rebuild's schema. It reads at call time, so one resolver
+        fresh rebuild's schema. It reads ``relations``, so one resolver
         serves a build's stages before and after its writes."""
         from .materialize.run import make_stored_resolver
 
-        return make_stored_resolver(self.reg, self.spark, self.base)
+        return make_stored_resolver(self.reg, self.stored_relation)
 
     @functools.cached_property
     def graph(self) -> dict[str, set]:
@@ -246,7 +269,9 @@ def _materialize(args, names: list[str]) -> None:
         vars=args.run_vars,
         full_refresh=args.full_refresh,
     )
-    for name in built:
+    for name, df in built.items():
+        if reg.get(name).materialization != "view":
+            args.relations[name] = df
         print(f"ran {name}  [{reg.get(name).materialization}]")
 
 
@@ -308,8 +333,6 @@ def _test(args, select: list[str] | None, run_types) -> int:
     unscoped); exit status 1 on any failure."""
     import shutil
 
-    from .materialize.incremental import open_stored
-    from .materialize.run import stored_shape
     from .testing.schedule import run_schema_tests
 
     reg, spark, base = args.reg, args.spark, args.base
@@ -322,23 +345,12 @@ def _test(args, select: list[str] | None, run_types) -> int:
     # its accumulated stored relation, not a single-batch recompute.
     ctx = reg.context(spark, vars=args.run_vars, stored_resolver=args.stored_resolver)
 
-    @functools.cache
     def resolve(name):
-        """dbt test checks the MATERIALIZED relation: prefer the
-        warehouse artifact a prior run/build wrote (a merge defect
-        accumulated there must fail the test even though a fresh
-        recompute would pass); views/unbuilt models fall back to
-        ref-recompute, which is also dbt's behavior for views. The
-        path mirrors cmd_run's target/schema namespace policy. A
-        rowless artifact (e.g. a vars-scoped run over an empty slice)
-        reads with its stored shape's schema. Memoized: a model with
-        several declarations is opened once per verb, which is safe
-        because nothing writes a model path during ``test`` (stored
-        failures land under dbt_test__audit)."""
-        return open_stored(
-            spark, os.path.join(base, name),
-            lambda: stored_shape(reg.get(name), ctx.ref(name)).schema,
-        )
+        """dbt test checks the MATERIALIZED relation (a merge defect
+        accumulated there must fail even though a recompute would pass);
+        views/unbuilt models fall back to ref-recompute, like dbt. A
+        rowless artifact reads with its stored shape's schema."""
+        return args.stored_relation(name, ctx)
 
     n_pass = n_total = 0
     ok = True
@@ -563,9 +575,6 @@ def cmd_docs(args) -> int:
     # refresh must not erase a schema a bound run already recorded),
     # else an empty mapping (honestly unknown, but iterable — a
     # consumer walking columns must not trip over null; ADVICE r6 #4).
-    from .materialize.incremental import open_stored
-    from .materialize.run import stored_shape
-
     base = args.base
     cpath = os.path.join(base, "catalog.json")
     previous: dict = {}
@@ -583,38 +592,27 @@ def cmd_docs(args) -> int:
             except (OSError, json.JSONDecodeError):
                 previous = {}
     catalog: dict = {}
-    candidates = [n for n in reg.models if os.path.isdir(os.path.join(base, n))]
-    if candidates:
-        spark = args.spark
-        # the schema-derivation context resolves refs to STORED
-        # relations like cmd_test's does (ADVICE r6 #4): a rowless
-        # model whose plan refs an incremental with accumulated
-        # append_new_columns must derive the accumulated schema, not a
-        # single-batch recompute (which could even fail analysis)
-        ctx = (
-            reg.context(spark, vars=args.run_vars, stored_resolver=args.stored_resolver)
-            if args.raw_dir is not None
-            else None
-        )
-        for name in candidates:
-            # None here is a rowless relation: candidates are directories
-            df = open_stored(spark, os.path.join(base, name))
-            if df is not None:
-                catalog[name] = {
-                    "columns": {
-                        f.name: f.dataType.simpleString() for f in df.schema.fields
-                    },
-                    "row_count": df.count(),
-                }
-            else:
-                if ctx is not None:
-                    schema = stored_shape(reg.get(name), ctx.ref(name)).schema
-                    columns = {
-                        f.name: f.dataType.simpleString() for f in schema.fields
-                    }
-                else:
-                    columns = (previous.get(name) or {}).get("columns") or {}
-                catalog[name] = {"columns": columns, "row_count": 0}
+    # refs resolve to STORED relations, as in cmd_test (ADVICE r6 #4):
+    # a rowless model over an evolved incremental derives its schema
+    # from the accumulated columns, not a single-batch recompute
+    ctx = (
+        reg.context(args.spark, vars=args.run_vars, stored_resolver=args.stored_resolver)
+        if args.raw_dir is not None
+        else None
+    )
+    for name in reg.models:
+        if not os.path.isdir(os.path.join(base, name)):
+            continue
+        df = args.stored_relation(name, ctx)
+        if df is None:  # rowless, and no bound sources to derive it
+            columns = (previous.get(name) or {}).get("columns") or {}
+            catalog[name] = {"columns": columns, "row_count": 0}
+        else:
+            catalog[name] = {
+                "columns": {f.name: f.dataType.simpleString() for f in df.schema.fields},
+                # a rowless directory has no files to count: no job
+                "row_count": df.count() if df.inputFiles() else 0,
+            }
     os.makedirs(base, exist_ok=True)
     with open(cpath, "w") as f:
         json.dump(catalog, f, indent=2, sort_keys=True)

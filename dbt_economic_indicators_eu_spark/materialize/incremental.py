@@ -20,9 +20,9 @@ Plain-parquet strategy (no Delta in this environment):
    table-pointer flip instead.
 
 ``open_stored`` is the one reader of a stored relation: the merge
-target here, the snapshot's prior state, the run read-back, the
-stored-relation resolver behind ``ref()`` and the CLI ``test``/``docs``
-verbs all open a model's directory through it.
+target here, the snapshot's prior state, the stored-relation resolver
+behind ``ref()`` and the CLI ``test``/``docs`` verbs all open a model's
+directory through it.
 
 Scale posture: the anti-join shuffles on the unique key (uniform
 surrogate md5 → no skew); the incoming batch is typically small →
@@ -101,10 +101,10 @@ def recover_interrupted_swap(path: str) -> None:
 def open_stored(
     spark: SparkSession, path: str, empty_schema=None
 ) -> DataFrame | None:
-    """THE reader of a model's stored relation at ``path``; every
-    consumer opens it here, because each one re-implementing the read
-    is how a copy drifts and crashes on exactly the table it skipped a
-    step for. In order:
+    """THE reader of a model's stored relation at ``path`` (a write
+    reads back what it stored with the written schema instead): each
+    consumer re-implementing the read is how a copy drifts and crashes
+    on exactly the table it skipped a step for. In order:
 
     1. ``recover_interrupted_swap``: a missing path with a live
        ``.old`` must read as the recovered relation. A reader that took
@@ -225,8 +225,9 @@ def run_incremental(
     watermark_col: str | None = None,
     broadcast_incoming_keys: bool = False,
     partition_by: str | None = None,
-) -> None:
-    """Full materialization: read target (if any), merge, swap-write.
+) -> DataFrame:
+    """Full materialization: read target (if any), merge, swap-write;
+    returns the frame written (``existing`` if the watermark drops all).
 
     ``partition_by`` switches to a PARTITION-SCOPED merge — the shape
     that matters at 100 TB: the target is laid out as
@@ -245,7 +246,7 @@ def run_incremental(
         if partition_by is not None:
             w = w.partitionBy(partition_by)
         swap_into_place(w, target_path)
-        return
+        return merged
 
     # -- partition-scoped path ----------------------------------------
     # CONTRACT: the partition value must be stable per unique_key (a
@@ -270,7 +271,7 @@ def run_incremental(
     # partitions), so the driver-side list is safe
     parts = [r[0] for r in incoming.select(partition_by).distinct().collect()]
     if not parts:
-        return  # watermark dropped everything: no partition changes
+        return existing  # watermark dropped everything: no partition changes
     # null-safe membership: isin() is NULL for a NULL partition value,
     # which would EXCLUDE existing NULL-partition rows from the merge
     # while dynamic overwrite still replaces their directory — silent
@@ -302,3 +303,4 @@ def run_incremental(
         .partitionBy(partition_by)
         .parquet(target_path)
     )
+    return merged

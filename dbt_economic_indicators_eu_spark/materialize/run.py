@@ -65,12 +65,12 @@ def log_observed(name: str, obs: Observation) -> int:
     return n
 
 
-def _overwrite_table(df: DataFrame, model, name: str, path: str) -> None:
+def _overwrite_table(df: DataFrame, model, name: str, path: str) -> DataFrame:
     """Overwrite-write a model's frame as its stored relation, honoring
     the declared partition layout (a fact-grain table partitioned by
     year gives downstream readers partition pruning instead of full
-    scans). Used by table materializations and by ``--full-refresh``
-    incremental rebuilds."""
+    scans), and return it. Used by table materializations and by
+    ``--full-refresh`` incremental rebuilds."""
     observed, obs = observe_row_count(df, name)
     writer = observed.write.mode("overwrite")
     if model.partition_by:
@@ -81,6 +81,7 @@ def _overwrite_table(df: DataFrame, model, name: str, path: str) -> None:
     # --full-refresh rebuild of an incremental's accumulated history)
     swap_into_place(writer, path)
     log_observed(name, obs)
+    return df
 
 
 def _materialize_one(
@@ -96,7 +97,8 @@ def _materialize_one(
     """Build + write one model. Plan construction and cache updates run
     under ``build_lock`` (Context memoization is not thread-safe); the
     WRITE — the expensive Spark action — runs outside it, so
-    independent models' jobs overlap."""
+    independent models' jobs overlap. The read-back takes the written
+    frame's schema: no footer job, and a rowless directory reads typed."""
     model = ctx.registry.get(name)
     with build_lock:
         df = ctx.ref(name)  # builds upstream chain lazily, checks contracts
@@ -106,7 +108,7 @@ def _materialize_one(
             df.createOrReplaceTempView(name)
         return df
     if model.materialization == "table":
-        _overwrite_table(df, model, name, path)
+        written = _overwrite_table(df, model, name, path)
     elif model.materialization == "incremental":
         assert model.unique_key, f"incremental model {name} needs unique_key"
         if full_refresh:
@@ -114,23 +116,19 @@ def _materialize_one(
             # from the model's current plan — watermark and keyed upsert
             # skipped, accumulated state replaced (snapshots are NOT
             # rebuilt, matching dbt: history is immutable)
-            _overwrite_table(df, model, name, path)
+            written = _overwrite_table(df, model, name, path)
         else:
             # per-model watermark (the reference's is_incremental()
             # predicate); the run-level param is a global override
-            run_incremental(
+            written = run_incremental(
                 spark, path, df, model.unique_key,
                 watermark_col if watermark_col is not None else model.watermark_col,
                 partition_by=model.partition_by,
             )
     elif model.materialization == "snapshot":
         assert model.unique_key and model.check_cols
-        run_snapshot(spark, path, df, model.unique_key, list(model.check_cols), now)
-    # a rowless materialization (e.g. project vars scoping the run to an
-    # empty slice) writes no parquet footers: read it back with the
-    # STORED-relation schema so downstream refs see an empty, typed
-    # relation instead of UNABLE_TO_INFER_SCHEMA
-    fresh = open_stored(spark, path, lambda: stored_shape(model, df).schema)
+        written = run_snapshot(spark, path, df, model.unique_key, list(model.check_cols), now)
+    fresh = spark.read.schema(written.schema).parquet(path)
     with build_lock:
         ctx.set_relation(name, fresh)
     return fresh
@@ -138,8 +136,8 @@ def _materialize_one(
 
 def stored_shape(model, build_df: DataFrame) -> DataFrame:
     """THE lazy frame shaped like a model's STORED relation, derived
-    from its build plan. The rowless read-back here, the CLI test and
-    docs verbs and the probe context's refs all take it from here (one
+    from its build plan. The CLI test and docs verbs' rowless reads
+    and the probe context's refs all take it from here (one
     definition, or the SCD2-schema rule drifts). For a snapshot it is
     NOT the build plan: scd2_merge appends valid_from/valid_to/
     is_current, which downstream refs and schema tests select, so it
@@ -152,42 +150,42 @@ def stored_shape(model, build_df: DataFrame) -> DataFrame:
     return build_df
 
 
-def make_stored_resolver(registry, spark, base, *, exclude: set[str] | None = None):
-    """THE warehouse stored-relation resolver (dbt ref semantics),
-    shared by run_models' real context, the probe edge harvest, and
-    the CLI test verb — one definition so the three consumers can
-    never drift. Views return None (a stored view is a stored QUERY;
-    recomputing the plan is its read semantics), as do names in
-    ``exclude`` (models materializing in-run arrive via set_relation)
-    and never-materialized or rowless paths (fall back to a fresh
-    build)."""
+def make_stored_resolver(registry, opener, *, exclude: set[str] | None = None):
+    """THE stored-relation resolver (dbt ref semantics) over ``opener``
+    (name -> stored relation or None), shared by run_models' contexts
+    and the CLI's graph harvest and test/docs contexts — one definition
+    so the consumers can never drift. Views return None (a stored view is a
+    stored QUERY; recomputing the plan is its read semantics), as do
+    names in ``exclude`` (models materializing in-run arrive via
+    set_relation) and never-materialized or rowless paths (fall back
+    to a fresh build)."""
 
     def stored_resolver(name: str):
         if exclude is not None and name in exclude:
             return None
         if registry.get(name).materialization == "view":
             return None
-        return open_stored(spark, os.path.join(base, name))
+        return opener(name)
 
     return stored_resolver
 
 
-def _selected_upstream_map(registry, spark, names, mocks, vars, base):
+def _selected_upstream_map(registry, spark, names, mocks, vars, opener):
     """For each selected model, its SELECTED upstreams — transitively
     THROUGH unselected nodes: with A(selected) -> B(unselected view) ->
     C(selected), A must wait for C, because A's build recomputes B,
     whose ref(C) must resolve to C's stored relation.
 
     The probe resolves refs of already-materialized models to their
-    STORED relations under ``base`` (the same resolution the real run
-    will use): a downstream plan may select columns that exist only in
+    STORED relations through ``opener`` (the same resolution the real
+    run will use): a downstream plan may select columns that exist only in
     the stored relation (snapshot SCD2 columns; incremental
     append_new_columns from earlier batches) and would otherwise fail
     analysis during the edge harvest."""
 
     deps = registry.dependency_graph(
         spark, mocks=mocks, vars=vars, select=names,
-        stored_resolver=make_stored_resolver(registry, spark, base),
+        stored_resolver=make_stored_resolver(registry, opener),
     )
     selected = set(names)
 
@@ -225,7 +223,7 @@ def run_models(
 ) -> dict[str, DataFrame]:
     """Materialize ``select`` (default: all) models. Returns the final
     DataFrame per model (for views: the lazy plan; for written models:
-    a fresh scan of what was just written).
+    the stored relation, read with the written schema).
 
     ``target``/``schema`` apply the ``schema_name`` namespace policy:
     with a schema, written models land under
@@ -267,6 +265,9 @@ def run_models(
     if now is not None and "now" not in (vars or {}):
         vars = {**(vars or {}), "now": now}
 
+    def opener(name: str):
+        return open_stored(spark, os.path.join(base, name))
+
     # dbt ref semantics for UNSELECTED written upstreams: an explicit
     # --select run must resolve refs to the already-materialized
     # warehouse relation (an incremental's fresh recompute would see
@@ -276,7 +277,7 @@ def run_models(
     ctx: Context = registry.context(
         spark, mocks=mocks, vars=vars,
         stored_resolver=make_stored_resolver(
-            registry, spark, base, exclude=set(names)
+            registry, opener, exclude=set(names)
         ),
     )
 
@@ -298,7 +299,7 @@ def run_models(
         decl[a] < decl[b] for a, b in zip(names, names[1:]) if a in decl and b in decl
     )
     if not in_decl_order or (threads > 1 and len(names) > 1):
-        upstream = _selected_upstream_map(registry, spark, names, mocks, vars, base)
+        upstream = _selected_upstream_map(registry, spark, names, mocks, vars, opener)
     else:
         upstream = {n: set(names[:i]) for i, n in enumerate(names)}
 

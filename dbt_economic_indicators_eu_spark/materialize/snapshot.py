@@ -128,7 +128,7 @@ def run_snapshot(
     unique_key: str,
     check_cols: list[str],
     now,
-) -> None:
+) -> DataFrame:
     prev = open_stored(spark, snapshot_path)  # None: first run
     # fail fast on duplicate keys, like the now=None check: duplicates
     # fan out the full_outer join and compound multiple is_current
@@ -155,3 +155,4 @@ def run_snapshot(
         )
     nxt = scd2_merge(prev, current, unique_key, check_cols, now)
     swap_into_place(nxt.write.mode("overwrite"), snapshot_path)
+    return nxt

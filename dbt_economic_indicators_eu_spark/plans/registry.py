@@ -405,8 +405,7 @@ class Context:
     # probe contexts (dependency_graph edge harvest) adjust refs to
     # the stored-relation schema — see ref()
     _probe: bool = False
-    # optional name -> stored DataFrame | None hook for probe contexts
-    # (run_models passes a warehouse reader)
+    # optional name -> stored DataFrame | None hook (make_stored_resolver)
     _stored_resolver: "Callable[[str], DataFrame | None] | None" = None
 
     def _record_edge(self, name: str) -> None:
@@ -446,12 +445,9 @@ class Context:
         # materialized warehouse relation, never a fresh recompute —
         # for an incremental that recompute would see only the current
         # batch, silently dropping the accumulated history dbt's ref()
-        # reads. run_models passes a resolver that returns None for
-        # selected names (those materialize in-run and arrive via
-        # set_relation) and for views (a stored view is a stored QUERY;
-        # recomputing the plan IS its read semantics). Probe contexts
-        # instead build first (edge harvest needs the refs) and swap
-        # below.
+        # reads (which names resolve is make_stored_resolver's rule).
+        # Probe contexts instead build first (edge harvest needs the
+        # refs) and swap below.
         if not self._probe and self._stored_resolver is not None:
             stored = self._stored_resolver(name)
             if stored is not None:

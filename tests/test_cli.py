@@ -674,9 +674,13 @@ def test_cli_test_checks_materialized_relation(spark, tmp_path, capsys):
 
 
 def test_cli_test_opens_each_stored_relation_once(spark, tmp_path, capsys, monkeypatch):
-    """`test` memoizes its stored-relation reader: a model with several
-    declarations (fct_economic_indicators has 5) is opened once per
-    verb, not once per declaration, and still passes."""
+    """A command infers each stored relation's schema at most once, and
+    a write hands back the relation it stored instead of re-opening it:
+    a full-refresh build infers neither model it writes and tests; a
+    merge or snapshot reads its target once; `test` opens a model with
+    several declarations (fct_economic_indicators has 5) once, not
+    once per declaration, and still passes; `docs` opens each stored
+    relation once for the graph harvest and the catalog together."""
     from collections import Counter
 
     from pyspark.sql.readwriter import DataFrameReader
@@ -685,30 +689,54 @@ def test_cli_test_opens_each_stored_relation_once(spark, tmp_path, capsys, monke
     wh = str(tmp_path / "wh")
     _write_raw(spark, raw)
     args = ["--warehouse", wh, "--raw-dir", raw, "--now", "2024-03-01T00:00:00"]
-    assert main(["run", *args, "--select", "fct_economic_indicators"]) == 0
-    capsys.readouterr()
+    fct, snap = (os.path.join(wh, n) for n in ("fct_economic_indicators", "snap_gdp_history"))
 
+    # schema-inference reads per path: a reader given .schema(...)
+    # infers nothing
     reads: Counter = Counter()
-    parquet = DataFrameReader.parquet
+    schema, parquet = DataFrameReader.schema, DataFrameReader.parquet
+
+    def typed(self, *a, **kw):
+        self._typed = True
+        return schema(self, *a, **kw)
 
     def counting(self, *paths, **kwargs):
-        reads.update(os.path.normpath(p) for p in paths)
+        if not getattr(self, "_typed", False):
+            reads.update(os.path.normpath(p) for p in paths)
         return parquet(self, *paths, **kwargs)
 
+    monkeypatch.setattr(DataFrameReader, "schema", typed)
     monkeypatch.setattr(DataFrameReader, "parquet", counting)
-    rc = main(["test", *args, "--select", "fct_economic_indicators"])
-    out = capsys.readouterr().out
-    assert rc == 0, out
+
+    def opens(*argv) -> tuple[Counter, str]:
+        reads.clear()
+        rc = main([*argv, *args])
+        out = capsys.readouterr().out
+        assert rc == 0, out
+        return Counter(reads), out
+
+    got, _ = opens("build", "--full-refresh", "--select",
+                   "fct_economic_indicators", "snap_gdp_history")
+    assert got[fct] == got[snap] == 0, got
+    assert opens("run", "--select", "fct_economic_indicators")[0][fct] == 1
+    assert opens("snapshot")[0][snap] == 1
+    got, out = opens("test", "--select", "fct_economic_indicators")
     assert out.count("PASS  fct_economic_indicators.") == 5, out
-    assert reads[os.path.join(wh, "fct_economic_indicators")] == 1, reads
+    assert got[fct] == 1, got
+
+    got, _ = opens("docs")
+    stored = {p: n for p, n in got.items() if p.startswith(wh)}
+    assert fct in stored and snap in stored, got
+    assert set(stored.values()) == {1}, got
 
 
 def test_cli_build_resolves_once(spark, tmp_path, capsys, monkeypatch):
     """A command is one invocation: `build`'s stages share one selection
     and one dependency-graph harvest for it (run_models' schedule probe
     is the only other), and each raw source is read once across every
-    stage and probe context. `ls` and `docs` with tag: selectors and no
-    --raw-dir never start a session."""
+    stage and probe context. A second build over its own warehouse
+    passes. `ls` and `docs` with tag: selectors and no --raw-dir never
+    start a session."""
     from collections import Counter
 
     from pyspark.sql.readwriter import DataFrameReader
@@ -743,6 +771,13 @@ def test_cli_build_resolves_once(spark, tmp_path, capsys, monkeypatch):
         os.path.join(raw, f"{name}.parquet"): 1
         for name in ("raw_gdp", "raw_unemployment", "raw_inflation", "raw_population")
     }, raw_reads
+    # the same build over its own warehouse: the graph harvest opens the
+    # stored relations before the run stage swaps them, so the test
+    # stage must read what the run stage wrote, not the swapped-out files
+    rc = main(["build", "--warehouse", wh, "--raw-dir", raw,
+               "--now", "2024-03-01T00:00:00", "--select", "stg_eurostat__gdp+"])
+    out = capsys.readouterr().out
+    assert rc == 0 and "FAIL" not in out, out
 
     def no_session(*args, **kwargs):
         raise AssertionError("a session was started")

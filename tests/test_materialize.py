@@ -18,6 +18,14 @@ def _rows(df, *cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
+def _same_relation(got, want):
+    """Same schema and the same multiset of rows."""
+    from collections import Counter
+
+    assert got.schema == want.schema
+    assert Counter(got.collect()) == Counter(want.collect())
+
+
 # ---------------- incremental -------------------------------------------
 
 
@@ -168,10 +176,14 @@ def test_observe_row_count_piggybacks_on_action(spark, tmp_path):
 
 def test_run_models_target_namespacing(spark, tmp_path):
     """A dev-target run lands under dev_<schema>/ and cannot collide
-    with the prod namespace (data_quality.sql:66-73 policy, enforced)."""
+    with the prod namespace (data_quality.sql:66-73 policy, enforced).
+    The relations run_models hands back equal what open_stored reads,
+    for a table and for a rowless partitioned table (no footers: typed
+    by its stored shape)."""
     import os
 
-    from dbt_economic_indicators_eu_spark.materialize.run import run_models
+    from dbt_economic_indicators_eu_spark.materialize.incremental import open_stored
+    from dbt_economic_indicators_eu_spark.materialize.run import run_models, stored_shape
     from dbt_economic_indicators_eu_spark.plans.registry import Registry
 
     reg = Registry()
@@ -180,11 +192,23 @@ def test_run_models_target_namespacing(spark, tmp_path):
     def t_ns_table(ctx):
         return spark.range(3).selectExpr("id", "id * 2 AS v")
 
+    @reg.model("t_ns_empty", materialization="table", partition_by="p")
+    def t_ns_empty(ctx):
+        return spark.range(0).selectExpr("id", "CAST(id AS INT) AS p", "'x' AS s")
+
     wh = str(tmp_path / "wh")
     out = run_models(reg, spark, wh, target="dev", schema="marts")
     assert out["t_ns_table"].count() == 3
     assert os.path.isdir(os.path.join(wh, "dev_marts", "t_ns_table"))
     assert not os.path.exists(os.path.join(wh, "marts"))
+    base = os.path.join(wh, "dev_marts")
+    _same_relation(out["t_ns_table"], open_stored(spark, os.path.join(base, "t_ns_table")))
+    empty = open_stored(
+        spark, os.path.join(base, "t_ns_empty"),
+        lambda: stored_shape(reg.get("t_ns_empty"), reg.context(spark).ref("t_ns_empty")).schema,
+    )
+    assert out["t_ns_empty"].count() == 0
+    _same_relation(out["t_ns_empty"], empty)
 
     run_models(reg, spark, wh, target="prod", schema="marts")
     assert os.path.isdir(os.path.join(wh, "marts", "t_ns_table"))
@@ -342,8 +366,12 @@ def test_snapshot_rowless_prior_recovers(spark, tmp_path):
     directory with no parquet footers; the next run must treat it as
     first-run (footer probe) instead of crashing UNABLE_TO_INFER_SCHEMA
     forever — and the rowless read-back must carry the SCD2 columns so
-    downstream refs can select is_current/valid_from."""
-    from dbt_economic_indicators_eu_spark.materialize.run import run_models
+    downstream refs can select is_current/valid_from. Both read-backs
+    equal what open_stored reads."""
+    import os
+
+    from dbt_economic_indicators_eu_spark.materialize.incremental import open_stored
+    from dbt_economic_indicators_eu_spark.materialize.run import run_models, stored_shape
     from dbt_economic_indicators_eu_spark.plans.registry import Registry
 
     wh = str(tmp_path / "wh")
@@ -363,12 +391,16 @@ def test_snapshot_rowless_prior_recovers(spark, tmp_path):
 
         return reg
 
-    out1 = run_models(
-        build(0), spark, wh, now="2024-01-01 00:00:00", select=["snap"]
-    )
+    reg0 = build(0)
+    out1 = run_models(reg0, spark, wh, now="2024-01-01 00:00:00", select=["snap"])
     # rowless read-back still exposes the stored-relation schema
     assert {"valid_from", "valid_to", "is_current"} <= set(out1["snap"].columns)
     assert out1["snap"].count() == 0
+    path = os.path.join(wh, "snap")
+    _same_relation(out1["snap"], open_stored(
+        spark, path,
+        lambda: stored_shape(reg0.get("snap"), reg0.context(spark).ref("snap")).schema,
+    ))
     # second run over real rows: footer probe reads the rowless prior
     # as first-run instead of crashing
     out2 = run_models(
@@ -376,6 +408,8 @@ def test_snapshot_rowless_prior_recovers(spark, tmp_path):
     )
     rows = out2["snap"].collect()
     assert len(rows) == 3 and all(r.is_current for r in rows)
+    # the relation the write hands back is the one open_stored reads
+    _same_relation(out2["snap"], open_stored(spark, path))
 
 
 # ---------------- review-pass regressions (round 8) ----------------------
@@ -578,7 +612,7 @@ def test_stored_resolver_recovers_crashed_swap(spark, tmp_path):
         path + ".tmp"
     )
     os.makedirs(path + ".old")  # rename-aside happened; crash before promote
-    resolver = make_stored_resolver(reg, spark, base)
+    resolver = make_stored_resolver(reg, lambda n: open_stored(spark, os.path.join(base, n)))
     got = resolver("acc")
     assert got is not None and got.collect()[0]["k"] == "k1"
     assert os.path.isdir(path)
@@ -664,8 +698,11 @@ def test_partitioned_schema_evolution_survives_mixed_footers(spark, tmp_path):
     """append_new_columns + partition-scoped merge leaves mixed-schema
     partitions (only touched partitions rewrite); the target read-back
     must merge footers or the evolved column silently disappears — and
-    the NEXT merge would rewrite kept rows without its values."""
+    the NEXT merge would rewrite kept rows without its values. The
+    frame the merge hands back reads the mixed-footer table the same
+    as open_stored."""
     from dbt_economic_indicators_eu_spark.materialize.incremental import (
+        open_stored,
         run_incremental,
     )
 
@@ -677,7 +714,8 @@ def test_partitioned_schema_evolution_survives_mixed_footers(spark, tmp_path):
 
     # batch touching ONLY d=2 adds column c
     batch = spark.createDataFrame([("b", 2, 21.0, "new")], "k string, d int, v double, c string")
-    run_incremental(spark, target, batch, "k", partition_by="d")
+    written = run_incremental(spark, target, batch, "k", partition_by="d")
+    _same_relation(spark.read.schema(written.schema).parquet(target), open_stored(spark, target))
 
     back = spark.read.option("mergeSchema", "true").parquet(target)
     assert "c" in back.columns
