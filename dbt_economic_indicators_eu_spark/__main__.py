@@ -27,9 +27,11 @@ selected non-snapshot models, the snapshot stage the selected
 snapshots, and the test stage tests the whole selection.
 
 Each command resolves once: ``--vars`` and the clock, the registry,
-the session, the stored-relation resolver and the dependency graph
-(harvested only for a graph selector or the docs manifest's edges);
-each raw source is read once.
+the session, and one store (``materialize.run.Relations``) that every
+stage and run_models' scheduler share: each stored relation is opened
+or written into it once, and its dependency graph is harvested at most
+once (for a graph selector, the docs manifest's edges, or a run whose
+schedule needs edges). Each raw source is read once.
 """
 
 from __future__ import annotations
@@ -134,8 +136,9 @@ class Invocation(argparse.Namespace):
     """One CLI command: the parsed flags plus what the command resolves
     ONCE, however many stages it runs — the parsed ``--vars``
     (``run_vars``, set by main after the clock check), the registry,
-    the session, the warehouse base, the stored-relation resolver and
-    the dependency graph. Everything but ``run_vars`` is built on first
+    the session, the warehouse base and the command's ``Relations``
+    store (stored relations, resolver and dependency graph, shared
+    with run_models). Everything but ``run_vars`` is built on first
     use, so a command that needs no session never starts one."""
 
     @functools.cached_property
@@ -155,45 +158,15 @@ class Invocation(argparse.Namespace):
         return warehouse_base(self.warehouse, self.target, self.schema)
 
     @functools.cached_property
-    def relations(self) -> dict:
-        """model → the stored relation this command opened or wrote
-        (dbt's relation cache). A write replaces its entry, so no stage
-        holds a relation whose files a swap deleted."""
-        return {}
+    def relations(self):
+        """The command's one store of relations opened or written, and
+        its one dependency graph (dbt's relation cache and manifest)."""
+        from .materialize.run import Relations
 
-    def stored_relation(self, name: str, ctx=None):
-        """``open_stored`` on a model's directory, once per command. Given
-        a context, a rowless directory reads typed by the model's stored
-        shape; else it gives None, as an unbuilt model does (retried)."""
-        from .materialize.incremental import open_stored
-        from .materialize.run import stored_shape
+        return Relations(self.reg, self.spark, self.base, self.run_vars)
 
-        if self.relations.get(name) is None:
-            self.relations[name] = open_stored(
-                self.spark, os.path.join(self.base, name),
-                None if ctx is None else (
-                    lambda: stored_shape(self.reg.get(name), ctx.ref(name)).schema
-                ),
-            )
-        return self.relations[name]
-
-    @functools.cached_property
-    def stored_resolver(self):
-        """Refs of written models resolve to their STORED relations
-        (the resolver the run itself uses): a downstream plan may select
-        columns that exist only in the warehouse (SCD2 bookkeeping,
-        append_new_columns survivors) and would fail analysis against a
-        fresh rebuild's schema. It reads ``relations``, so one resolver
-        serves a build's stages before and after its writes."""
-        from .materialize.run import make_stored_resolver
-
-        return make_stored_resolver(self.reg, self.stored_relation)
-
-    @functools.cached_property
     def graph(self) -> dict[str, set]:
-        """model → direct upstreams, harvested once per command with the
-        run's vars and stored resolver (so a vars-conditional ref gives
-        the edge the run takes)."""
+        """The store's dependency graph, for graph selectors."""
         from .plans.registry import RegistryError
 
         if self.raw_dir is None:
@@ -201,9 +174,7 @@ class Invocation(argparse.Namespace):
                 "graph selectors (+) need --raw-dir: the dependency graph "
                 "is harvested from bound sources"
             )
-        return self.reg.dependency_graph(
-            self.spark, vars=self.run_vars, stored_resolver=self.stored_resolver
-        )
+        return self.relations.graph
 
     def selection(self, select) -> list[str] | None:
         """THE dbt ``--select``/``--exclude`` rule, for every verb: the
@@ -215,7 +186,7 @@ class Invocation(argparse.Namespace):
         exclude = self.exclude_nodes or []
         if not select and not exclude:
             return None
-        expand = functools.partial(self.reg.expand_selection, graph=lambda: self.graph)
+        expand = functools.partial(self.reg.expand_selection, graph=self.graph)
         names = expand(select) if select else [*self.reg.models, *self.reg.sources]
         dropped = set(expand(exclude))
         return [n for n in names if n not in dropped]
@@ -258,20 +229,10 @@ def _materialize(args, names: list[str]) -> None:
         # --now pins it for reproducible runs
         now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     built = run_models(
-        reg,
-        args.spark,
-        args.warehouse,
-        select=names,
-        now=now,
-        target=args.target,
-        schema=args.schema,
-        threads=args.threads,
-        vars=args.run_vars,
+        args.relations, select=names, now=now, threads=args.threads,
         full_refresh=args.full_refresh,
     )
-    for name, df in built.items():
-        if reg.get(name).materialization != "view":
-            args.relations[name] = df
+    for name in built:
         print(f"ran {name}  [{reg.get(name).materialization}]")
 
 
@@ -343,14 +304,14 @@ def _test(args, select: list[str] | None, run_types) -> int:
     # resolves refs to WRITTEN upstreams from the warehouse (dbt ref
     # semantics): a view under test that refs an incremental must see
     # its accumulated stored relation, not a single-batch recompute.
-    ctx = reg.context(spark, vars=args.run_vars, stored_resolver=args.stored_resolver)
+    ctx = reg.context(spark, vars=args.run_vars, stored_resolver=args.relations.resolver)
 
     def resolve(name):
         """dbt test checks the MATERIALIZED relation (a merge defect
         accumulated there must fail even though a recompute would pass);
         views/unbuilt models fall back to ref-recompute, like dbt. A
         rowless artifact reads with its stored shape's schema."""
-        return args.stored_relation(name, ctx)
+        return args.relations.stored_relation(name, ctx)
 
     n_pass = n_total = 0
     ok = True
@@ -477,7 +438,7 @@ def cmd_docs(args) -> int:
     _warn_unknown_vars(args)
     # the same graph the selection expands over; without bound sources
     # the manifest ships without edges
-    deps = args.graph if args.raw_dir is not None else {}
+    deps = args.relations.graph if args.raw_dir is not None else {}
     emitted = set(args.models_in(args.selection(args.select)))
 
     def model_node(name, m):
@@ -596,14 +557,14 @@ def cmd_docs(args) -> int:
     # a rowless model over an evolved incremental derives its schema
     # from the accumulated columns, not a single-batch recompute
     ctx = (
-        reg.context(args.spark, vars=args.run_vars, stored_resolver=args.stored_resolver)
+        reg.context(args.spark, vars=args.run_vars, stored_resolver=args.relations.resolver)
         if args.raw_dir is not None
         else None
     )
     for name in reg.models:
         if not os.path.isdir(os.path.join(base, name)):
             continue
-        df = args.stored_relation(name, ctx)
+        df = args.relations.stored_relation(name, ctx)
         if df is None:  # rowless, and no bound sources to derive it
             columns = (previous.get(name) or {}).get("columns") or {}
             catalog[name] = {"columns": columns, "row_count": 0}

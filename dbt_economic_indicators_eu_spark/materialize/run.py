@@ -14,6 +14,7 @@ Contract enforcement happens inside Context.ref() before any write
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 import threading
@@ -86,23 +87,24 @@ def _overwrite_table(df: DataFrame, model, name: str, path: str) -> DataFrame:
 
 def _materialize_one(
     ctx: Context,
-    spark: SparkSession,
+    store: Relations,
     name: str,
-    base: str,
-    watermark_col,
     now,
     build_lock,
     full_refresh: bool = False,
 ) -> DataFrame:
     """Build + write one model. Plan construction and cache updates run
-    under ``build_lock`` (Context memoization is not thread-safe); the
-    WRITE — the expensive Spark action — runs outside it, so
-    independent models' jobs overlap. The read-back takes the written
-    frame's schema: no footer job, and a rowless directory reads typed."""
+    under ``build_lock`` (Context memoization and the store are not
+    thread-safe); the WRITE — the expensive Spark action — runs outside
+    it, so independent models' jobs overlap. The read-back takes the
+    written frame's schema: no footer job, and a rowless directory
+    reads typed. It replaces the store's entry, so no later stage holds
+    a relation whose files the swap deleted."""
+    spark = store.spark
     model = ctx.registry.get(name)
     with build_lock:
         df = ctx.ref(name)  # builds upstream chain lazily, checks contracts
-    path = os.path.join(base, name)
+    path = os.path.join(store.base, name)
     if model.materialization == "view":
         with build_lock:
             df.createOrReplaceTempView(name)
@@ -119,10 +121,9 @@ def _materialize_one(
             written = _overwrite_table(df, model, name, path)
         else:
             # per-model watermark (the reference's is_incremental()
-            # predicate); the run-level param is a global override
+            # predicate)
             written = run_incremental(
-                spark, path, df, model.unique_key,
-                watermark_col if watermark_col is not None else model.watermark_col,
+                spark, path, df, model.unique_key, model.watermark_col,
                 partition_by=model.partition_by,
             )
     elif model.materialization == "snapshot":
@@ -131,13 +132,14 @@ def _materialize_one(
     fresh = spark.read.schema(written.schema).parquet(path)
     with build_lock:
         ctx.set_relation(name, fresh)
+        store.stored[name] = fresh
     return fresh
 
 
 def stored_shape(model, build_df: DataFrame) -> DataFrame:
     """THE lazy frame shaped like a model's STORED relation, derived
-    from its build plan. The CLI test and docs verbs' rowless reads
-    and the probe context's refs all take it from here (one
+    from its build plan. ``Relations.stored_relation``'s rowless reads
+    and the probe context's refs both take it from here (one
     definition, or the SCD2-schema rule drifts). For a snapshot it is
     NOT the build plan: scd2_merge appends valid_from/valid_to/
     is_current, which downstream refs and schema tests select, so it
@@ -152,13 +154,14 @@ def stored_shape(model, build_df: DataFrame) -> DataFrame:
 
 def make_stored_resolver(registry, opener, *, exclude: set[str] | None = None):
     """THE stored-relation resolver (dbt ref semantics) over ``opener``
-    (name -> stored relation or None), shared by run_models' contexts
-    and the CLI's graph harvest and test/docs contexts — one definition
-    so the consumers can never drift. Views return None (a stored view is a
-    stored QUERY; recomputing the plan is its read semantics), as do
-    names in ``exclude`` (models materializing in-run arrive via
-    set_relation) and never-materialized or rowless paths (fall back
-    to a fresh build)."""
+    (name -> stored relation or None), shared by the store's resolver
+    (``Relations``: the graph harvest and the test/docs contexts) and
+    run_models' contexts — one definition so the consumers can never
+    drift. Views return None (a stored view is a stored QUERY;
+    recomputing the plan is its read semantics), as do names in
+    ``exclude`` (models materializing in-run arrive via set_relation)
+    and never-materialized or rowless paths (fall back to a fresh
+    build)."""
 
     def stored_resolver(name: str):
         if exclude is not None and name in exclude:
@@ -170,28 +173,63 @@ def make_stored_resolver(registry, opener, *, exclude: set[str] | None = None):
     return stored_resolver
 
 
-def _selected_upstream_map(registry, spark, names, mocks, vars, opener):
-    """For each selected model, its SELECTED upstreams — transitively
-    THROUGH unselected nodes: with A(selected) -> B(unselected view) ->
-    C(selected), A must wait for C, because A's build recomputes B,
-    whose ref(C) must resolve to C's stored relation.
+class Relations:
+    """What one command has opened, written and harvested (dbt's
+    relation cache and manifest graph), shared by every stage of the
+    command and by run_models' scheduler: the registry, session,
+    warehouse base (``warehouse_base``) and run vars it was built from,
+    one dict of stored relations, the stored resolver over it, and one
+    lazy dependency graph. Pool threads reach it only under run_models'
+    ``build_lock``."""
 
-    The probe resolves refs of already-materialized models to their
-    STORED relations through ``opener`` (the same resolution the real
-    run will use): a downstream plan may select columns that exist only in
-    the stored relation (snapshot SCD2 columns; incremental
-    append_new_columns from earlier batches) and would otherwise fail
-    analysis during the edge harvest."""
+    def __init__(self, registry: Registry, spark: SparkSession, base: str,
+                 vars: dict | None = None) -> None:
+        self.registry, self.spark, self.base = registry, spark, base
+        self.vars = dict(vars or {})
+        # model → the stored relation this command opened or wrote; a
+        # write replaces its entry
+        self.stored: dict[str, DataFrame | None] = {}
+        # refs of written models resolve to their STORED relations: a
+        # downstream plan may select columns that exist only in the
+        # warehouse (SCD2 bookkeeping, append_new_columns survivors)
+        # and would fail analysis against a fresh rebuild's schema
+        self.resolver = make_stored_resolver(registry, self.stored_relation)
 
-    deps = registry.dependency_graph(
-        spark, mocks=mocks, vars=vars, select=names,
-        stored_resolver=make_stored_resolver(registry, opener),
-    )
+    def stored_relation(self, name: str, ctx: Context | None = None):
+        """``open_stored`` on a model's directory, once per command. Given
+        a context, a rowless directory reads typed by the model's stored
+        shape; else it gives None, as an unbuilt model does (retried)."""
+        if self.stored.get(name) is None:
+            self.stored[name] = open_stored(
+                self.spark, os.path.join(self.base, name),
+                None if ctx is None else (
+                    lambda: stored_shape(self.registry.get(name), ctx.ref(name)).schema
+                ),
+            )
+        return self.stored[name]
+
+    @functools.cached_property
+    def graph(self) -> dict[str, set]:
+        """model → direct upstreams, harvested once with the run vars
+        and the stored resolver (so a vars-conditional ref gives the
+        edge the run takes, and a plan selecting stored-only columns
+        analyzes)."""
+        return self.registry.dependency_graph(
+            self.spark, vars=self.vars, stored_resolver=self.resolver
+        )
+
+
+def _selected_upstream_map(graph: dict[str, set], names: list[str]) -> dict[str, set]:
+    """For each selected model, its SELECTED upstreams in ``graph`` —
+    transitively THROUGH unselected nodes: with A(selected) -> B
+    (unselected view) -> C(selected), A must wait for C, because A's
+    build recomputes B, whose ref(C) must resolve to C's stored
+    relation."""
     selected = set(names)
 
     def sel_ups(n: str) -> set[str]:
         out: set[str] = set()
-        stack, seen = list(deps.get(n, ())), set()
+        stack, seen = list(graph.get(n, ())), set()
         while stack:
             d = stack.pop()
             if d in seen:
@@ -200,35 +238,33 @@ def _selected_upstream_map(registry, spark, names, mocks, vars, opener):
             if d in selected:
                 out.add(d)
             else:
-                stack.extend(deps.get(d, ()))
+                stack.extend(graph.get(d, ()))
         return out
 
     return {n: sel_ups(n) for n in names}
 
 
 def run_models(
-    registry: Registry,
-    spark: SparkSession,
-    warehouse: str,
+    store: Relations,
     *,
     select: list[str] | None = None,
-    watermark_col: str | None = None,
     now=None,
-    mocks: dict[str, DataFrame] | None = None,
-    target: str = "prod",
-    schema: str | None = None,
     threads: int = 1,
-    vars: dict | None = None,
     full_refresh: bool = False,
 ) -> dict[str, DataFrame]:
-    """Materialize ``select`` (default: all) models. Returns the final
-    DataFrame per model (for views: the lazy plan; for written models:
-    the stored relation, read with the written schema).
+    """Materialize ``select`` (default: all) models of ``store.registry``
+    under ``store.base``, reading, writing and scheduling through the
+    command's ``store``. Returns the final DataFrame per model (for
+    views: the lazy plan; for written models: the stored relation, read
+    with the written schema), and puts each written relation into the
+    store.
 
-    ``target``/``schema`` apply the ``schema_name`` namespace policy:
-    with a schema, written models land under
+    The store's base applies the ``schema_name`` namespace policy
+    (``warehouse_base``): with a schema, written models land under
     ``<warehouse>/<schema_name(target, schema)>/`` — so a dev/CI run
-    can never overwrite prod tables in a shared warehouse.
+    can never overwrite prod tables in a shared warehouse. Its vars are
+    the run-level project variables (reference
+    ``dbt_project.yml:20-26``), resolved by models via ``ctx.var``.
 
     ``threads`` mirrors dbt's node-level concurrency (reference
     ``profiles.yml:11,14`` — ``threads: 4`` dev / ``8`` prod): models
@@ -241,15 +277,12 @@ def run_models(
     resolves to the STORED relation, dbt's contract). Models are
     returned in selection order.
 
-    ``vars`` are run-level project variables (reference
-    ``dbt_project.yml:20-26``), resolved by models via ``ctx.var``.
-
     ``full_refresh`` mirrors ``dbt run --full-refresh``: incremental
     models drop-and-rebuild from their current plan instead of
     merging; tables/views are unaffected (always rebuilt) and
     snapshots keep their immutable history, exactly like dbt."""
-    base = warehouse_base(warehouse, target, schema)
-    os.makedirs(base, exist_ok=True)
+    registry = store.registry
+    os.makedirs(store.base, exist_ok=True)
     names = select if select is not None else list(registry.models)
     # dedupe a repeated selection (order-preserving): the scheduler
     # would otherwise submit the same model twice
@@ -262,11 +295,9 @@ def run_models(
     # use datetime.now(); --now pins it for reproducible runs). An
     # explicit run-level "now" var wins; the key is inert for the
     # staging filter (models/econ.py _FILTER_VARS).
-    if now is not None and "now" not in (vars or {}):
-        vars = {**(vars or {}), "now": now}
-
-    def opener(name: str):
-        return open_stored(spark, os.path.join(base, name))
+    vars = store.vars
+    if now is not None and "now" not in vars:
+        vars = {**vars, "now": now}
 
     # dbt ref semantics for UNSELECTED written upstreams: an explicit
     # --select run must resolve refs to the already-materialized
@@ -275,31 +306,31 @@ def run_models(
     # names are excluded — they materialize in-run and land in the
     # context via set_relation.
     ctx: Context = registry.context(
-        spark, mocks=mocks, vars=vars,
+        store.spark, vars=vars,
         stored_resolver=make_stored_resolver(
-            registry, opener, exclude=set(names)
+            registry, store.stored_relation, exclude=set(names)
         ),
     )
 
     # One scheduler for every thread count: a model is submitted once
     # every SELECTED upstream it waits on has materialized, so its plan
     # (built inside _materialize_one) refs the STORED relation. Edges
-    # come from a probe build (Registry.dependency_graph's throwaway
-    # context: every selected plan built once to harvest refs, then
-    # discarded; its stored reads and source schema inference cost
-    # Spark jobs) only when they can change the schedule: a selection out of registry declaration order (a mart
-    # listed before its incremental upstream would otherwise build
-    # from a fresh single-batch recompute), or several models that
-    # could overlap. Otherwise the declaration-order chain is exact,
-    # since any subsequence of declaration order is topological; this
-    # covers a serial all-models run, the CLI's declaration-ordered
-    # lists at --threads 1, and every one-model run.
+    # come from the store's graph (harvested once per store: every
+    # plan built once to collect refs, then discarded; its stored reads
+    # and source schema inference cost Spark jobs) only when they can
+    # change the schedule: a selection out of registry declaration
+    # order (a mart listed before its incremental upstream would
+    # otherwise build from a fresh single-batch recompute), or several
+    # models that could overlap. Otherwise the declaration-order chain
+    # is exact, since any subsequence of declaration order is
+    # topological; this covers a serial all-models run, the CLI's
+    # declaration-ordered lists at --threads 1, and every one-model run.
     decl = {n: i for i, n in enumerate(registry.models)}
     in_decl_order = all(
         decl[a] < decl[b] for a, b in zip(names, names[1:]) if a in decl and b in decl
     )
     if not in_decl_order or (threads > 1 and len(names) > 1):
-        upstream = _selected_upstream_map(registry, spark, names, mocks, vars, opener)
+        upstream = _selected_upstream_map(store.graph, names)
     else:
         upstream = {n: set(names[:i]) for i, n in enumerate(names)}
 
@@ -315,8 +346,7 @@ def run_models(
                 pending.remove(n)
                 running[
                     pool.submit(
-                        _materialize_one,
-                        ctx, spark, n, base, watermark_col, now, build_lock,
+                        _materialize_one, ctx, store, n, now, build_lock,
                         full_refresh=full_refresh,
                     )
                 ] = n

@@ -268,29 +268,20 @@ class Registry:
         self,
         spark: SparkSession,
         *,
-        mocks: dict[str, DataFrame] | None = None,
         vars: dict | None = None,
-        select: Iterable[str] | None = None,
         stored_resolver=None,
     ) -> dict[str, set]:
         """model → direct upstreams (models and sources), harvested by
         building every model's LAZY plan in a scratch context — no
-        execution, just py4j plan construction. Needs bound sources
-        (or mocks covering them). ``mocks``/``vars`` mirror the run
-        configuration so conditional refs resolve the same way the
-        real run will; ``select`` limits the harvest."""
-        ctx = self.context(
-            spark, mocks=mocks, vars=vars, probe=True, stored_resolver=stored_resolver
-        )
-        names = list(select) if select is not None else list(self._models)
-        for name in names:
+        execution, just py4j plan construction. Needs bound sources.
+        ``vars`` and ``stored_resolver`` mirror the run configuration,
+        so conditional refs resolve the way the real run will and a
+        plan selecting stored-only columns analyzes."""
+        ctx = self.context(spark, vars=vars, probe=True, stored_resolver=stored_resolver)
+        for name in self._models:
             ctx.ref(name)
-        # return EVERY harvested edge, not just the selected nodes':
-        # a selected model may depend on another selected model only
-        # THROUGH an unselected intermediate, and schedulers need those
-        # intermediate edges to see the transitive ordering
         out = {n: set(v) for n, v in ctx.deps.items()}
-        for name in names:
+        for name in self._models:
             out.setdefault(name, set())
         return out
 
@@ -434,45 +425,51 @@ class Context:
         # cache keys are namespaced: a model and a source may share a
         # bare name (register() and source() each only police their own
         # dict), and a shared key would silently return the wrong frame
-        if f"m:{name}" in self._cache:
-            return self._cache[f"m:{name}"]
-        if name in self._building:
-            cycle = " -> ".join(self._building + [name])
-            raise RegistryError(f"ref cycle: {cycle}")
-        model = self.registry.get(name)
-        # REAL-run stored fallback (dbt ref semantics): an UNSELECTED
-        # table/incremental/snapshot upstream resolves to its already-
-        # materialized warehouse relation, never a fresh recompute —
-        # for an incremental that recompute would see only the current
-        # batch, silently dropping the accumulated history dbt's ref()
-        # reads (which names resolve is make_stored_resolver's rule).
-        # Probe contexts instead build first (edge harvest needs the
-        # refs) and swap below.
-        if not self._probe and self._stored_resolver is not None:
-            stored = self._stored_resolver(name)
-            if stored is not None:
-                self._cache[f"m:{name}"] = stored
-                return stored
-        self._building.append(name)
-        try:
-            df = model.build(self)
-        finally:
-            self._building.pop()
-        if model.contract is not None:
-            from ..testing.contracts import enforce_contract
+        if f"m:{name}" not in self._cache:
+            if name in self._building:
+                cycle = " -> ".join(self._building + [name])
+                raise RegistryError(f"ref cycle: {cycle}")
+            model = self.registry.get(name)
+            # REAL-run stored fallback (dbt ref semantics): an UNSELECTED
+            # table/incremental/snapshot upstream resolves to its already-
+            # materialized warehouse relation, never a fresh recompute —
+            # for an incremental that recompute would see only the current
+            # batch, silently dropping the accumulated history dbt's ref()
+            # reads (which names resolve is make_stored_resolver's rule).
+            # Probe contexts instead build first (edge harvest needs the
+            # refs) and swap in _probe_relation.
+            if not self._probe and self._stored_resolver is not None:
+                stored = self._stored_resolver(name)
+                if stored is not None:
+                    self._cache[f"m:{name}"] = stored
+                    return stored
+            self._building.append(name)
+            try:
+                df = model.build(self)
+            finally:
+                self._building.pop()
+            if model.contract is not None:
+                from ..testing.contracts import enforce_contract
 
-            enforce_contract(df.schema, model.contract, model_name=name)
-        if self._probe:
-            # PROBE contexts (dependency_graph's throwaway edge
-            # harvest) must present refs the way the REAL run will:
-            # downstream models ref the STORED relation, whose schema
-            # can differ from the raw build frame — a snapshot carries
-            # valid_from/valid_to/is_current, and an incremental
-            # accumulates append_new_columns from earlier batches — so
-            # a downstream plan selecting those columns would fail
-            # analysis during the harvest. Edges were already recorded
-            # by the build above; swap in the stored relation, or for
-            # a not-yet-materialized model its lazy stored shape.
+                enforce_contract(df.schema, model.contract, model_name=name)
+            self._cache[f"m:{name}"] = df
+        if self._probe and self._building:
+            return self._probe_relation(name)
+        return self._cache[f"m:{name}"]
+
+    def _probe_relation(self, name: str) -> DataFrame:
+        """What a PROBE context (dependency_graph's throwaway edge
+        harvest) hands a downstream plan's ref: the relation the REAL
+        run will hand it. That is the STORED relation, whose schema can
+        differ from the raw build frame — a snapshot carries
+        valid_from/valid_to/is_current, and an incremental accumulates
+        append_new_columns from earlier batches — so a downstream plan
+        selecting those columns would fail analysis against the build
+        frame. Edges were already recorded by the build; swap in the
+        stored relation, or for a not-yet-materialized model its lazy
+        stored shape. Only a downstream ref swaps, so the harvest opens
+        no stored relation that no plan refs."""
+        if f"p:{name}" not in self._cache:
             from ..materialize.run import stored_shape
 
             stored = (
@@ -480,9 +477,11 @@ class Context:
                 if self._stored_resolver is not None
                 else None
             )
-            df = stored if stored is not None else stored_shape(model, df)
-        self._cache[f"m:{name}"] = df
-        return df
+            self._cache[f"p:{name}"] = (
+                stored if stored is not None
+                else stored_shape(self.registry.get(name), self._cache[f"m:{name}"])
+            )
+        return self._cache[f"p:{name}"]
 
     def set_relation(self, name: str, df: DataFrame) -> None:
         """Point later ``ref(name)`` calls at the MATERIALIZED artifact

@@ -673,26 +673,15 @@ def test_cli_test_checks_materialized_relation(spark, tmp_path, capsys):
     assert "FAIL" in out and "fct_economic_indicators" in out
 
 
-def test_cli_test_opens_each_stored_relation_once(spark, tmp_path, capsys, monkeypatch):
-    """A command infers each stored relation's schema at most once, and
-    a write hands back the relation it stored instead of re-opening it:
-    a full-refresh build infers neither model it writes and tests; a
-    merge or snapshot reads its target once; `test` opens a model with
-    several declarations (fct_economic_indicators has 5) once, not
-    once per declaration, and still passes; `docs` opens each stored
-    relation once for the graph harvest and the catalog together."""
+@pytest.fixture
+def inference_reads(monkeypatch):
+    """Schema-inference reads per normalised path: each
+    ``DataFrameReader.parquet`` call made without a ``.schema(...)``,
+    one Spark job each."""
     from collections import Counter
 
     from pyspark.sql.readwriter import DataFrameReader
 
-    raw = str(tmp_path / "raw")
-    wh = str(tmp_path / "wh")
-    _write_raw(spark, raw)
-    args = ["--warehouse", wh, "--raw-dir", raw, "--now", "2024-03-01T00:00:00"]
-    fct, snap = (os.path.join(wh, n) for n in ("fct_economic_indicators", "snap_gdp_history"))
-
-    # schema-inference reads per path: a reader given .schema(...)
-    # infers nothing
     reads: Counter = Counter()
     schema, parquet = DataFrameReader.schema, DataFrameReader.parquet
 
@@ -707,13 +696,31 @@ def test_cli_test_opens_each_stored_relation_once(spark, tmp_path, capsys, monke
 
     monkeypatch.setattr(DataFrameReader, "schema", typed)
     monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    return reads
+
+
+def test_cli_test_opens_each_stored_relation_once(spark, tmp_path, capsys, inference_reads):
+    """A command infers each stored relation's schema at most once, and
+    a write hands back the relation it stored instead of re-opening it:
+    a full-refresh build infers neither model it writes and tests; a
+    merge or snapshot reads its target once; `test` opens a model with
+    several declarations (fct_economic_indicators has 5) once, not
+    once per declaration, and still passes; `docs` opens each stored
+    relation once for the graph harvest and the catalog together."""
+    from collections import Counter
+
+    raw = str(tmp_path / "raw")
+    wh = str(tmp_path / "wh")
+    _write_raw(spark, raw)
+    args = ["--warehouse", wh, "--raw-dir", raw, "--now", "2024-03-01T00:00:00"]
+    fct, snap = (os.path.join(wh, n) for n in ("fct_economic_indicators", "snap_gdp_history"))
 
     def opens(*argv) -> tuple[Counter, str]:
-        reads.clear()
+        inference_reads.clear()
         rc = main([*argv, *args])
         out = capsys.readouterr().out
         assert rc == 0, out
-        return Counter(reads), out
+        return Counter(inference_reads), out
 
     got, _ = opens("build", "--full-refresh", "--select",
                    "fct_economic_indicators", "snap_gdp_history")
@@ -730,43 +737,36 @@ def test_cli_test_opens_each_stored_relation_once(spark, tmp_path, capsys, monke
     assert set(stored.values()) == {1}, got
 
 
-def test_cli_build_resolves_once(spark, tmp_path, capsys, monkeypatch):
-    """A command is one invocation: `build`'s stages share one selection
-    and one dependency-graph harvest for it (run_models' schedule probe
-    is the only other), and each raw source is read once across every
-    stage and probe context. A second build over its own warehouse
-    passes. `ls` and `docs` with tag: selectors and no --raw-dir never
-    start a session."""
-    from collections import Counter
-
-    from pyspark.sql.readwriter import DataFrameReader
-
+def test_cli_build_resolves_once(spark, tmp_path, capsys, monkeypatch, inference_reads):
+    """A command is one invocation: `build`'s stages and run_models'
+    scheduler share one selection, one dependency-graph harvest and one
+    store of stored relations, and each raw source is read once across
+    every stage and probe context. A second build over its own
+    warehouse passes and infers each stored relation once, besides the
+    merge target's and the snapshot prior's own fresh opens. `ls` and
+    `docs` with tag: selectors and no --raw-dir never start a
+    session."""
     from dbt_economic_indicators_eu_spark import session
     from dbt_economic_indicators_eu_spark.plans.registry import Registry
 
     raw = str(tmp_path / "raw")
     wh = str(tmp_path / "wh")
     _write_raw(spark, raw)
-    reads: Counter = Counter()
     harvests = []
-    parquet, dependency_graph = DataFrameReader.parquet, Registry.dependency_graph
-
-    def counting_parquet(self, *paths, **kwargs):
-        reads.update(os.path.normpath(p) for p in paths)
-        return parquet(self, *paths, **kwargs)
+    dependency_graph = Registry.dependency_graph
 
     def counting_graph(self, *args, **kwargs):
-        harvests.append(kwargs.get("select"))
+        harvests.append(kwargs)
         return dependency_graph(self, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
     monkeypatch.setattr(Registry, "dependency_graph", counting_graph)
-    rc = main(["build", "--warehouse", wh, "--raw-dir", raw,
-               "--now", "2024-03-01T00:00:00", "--select", "stg_eurostat__gdp+"])
+    build = ["build", "--warehouse", wh, "--raw-dir", raw,
+             "--now", "2024-03-01T00:00:00", "--select", "stg_eurostat__gdp+"]
+    rc = main(build)
     out = capsys.readouterr().out
     assert rc == 0, out
-    assert len(harvests) <= 2, harvests
-    raw_reads = {p: n for p, n in reads.items() if p.startswith(raw)}
+    assert len(harvests) == 1, harvests
+    raw_reads = {p: n for p, n in inference_reads.items() if p.startswith(raw)}
     assert raw_reads == {
         os.path.join(raw, f"{name}.parquet"): 1
         for name in ("raw_gdp", "raw_unemployment", "raw_inflation", "raw_population")
@@ -774,10 +774,14 @@ def test_cli_build_resolves_once(spark, tmp_path, capsys, monkeypatch):
     # the same build over its own warehouse: the graph harvest opens the
     # stored relations before the run stage swaps them, so the test
     # stage must read what the run stage wrote, not the swapped-out files
-    rc = main(["build", "--warehouse", wh, "--raw-dir", raw,
-               "--now", "2024-03-01T00:00:00", "--select", "stg_eurostat__gdp+"])
+    inference_reads.clear()
+    rc = main(build)
     out = capsys.readouterr().out
     assert rc == 0 and "FAIL" not in out, out
+    fresh_opens = {os.path.join(wh, "fct_economic_indicators"): 1,  # merge target
+                   os.path.join(wh, "snap_gdp_history"): 1}  # snapshot prior
+    stored = {p: n for p, n in inference_reads.items() if p.startswith(wh)}
+    assert stored and all(n <= 1 + fresh_opens.get(p, 0) for p, n in stored.items()), stored
 
     def no_session(*args, **kwargs):
         raise AssertionError("a session was started")

@@ -105,7 +105,7 @@ def test_ref_resolves_to_materialized_artifact(spark, tmp_path):
     """After run_models, downstream refs must see the STORED relation —
     for a snapshot that includes valid_from/valid_to/is_current, which
     the pre-write recompute does not even have."""
-    from dbt_economic_indicators_eu_spark.materialize.run import run_models
+    from dbt_economic_indicators_eu_spark.materialize.run import Relations, run_models
 
     reg2 = Registry()
     reg2.source("raw", lambda s: s.createDataFrame([("a", 1)], "k string, v int"))
@@ -119,7 +119,7 @@ def test_ref_resolves_to_materialized_artifact(spark, tmp_path):
         return ctx.ref("snap2").select("k", "is_current")  # needs SCD2 cols
 
     out = run_models(
-        reg2, spark, str(tmp_path / "wh2"), select=["snap2", "downstream"],
+        Relations(reg2, spark, str(tmp_path / "wh2")), select=["snap2", "downstream"],
         now=dt.datetime(2024, 1, 1),
     )
     rows = out["downstream"].collect()

@@ -183,7 +183,12 @@ def test_run_models_target_namespacing(spark, tmp_path):
     import os
 
     from dbt_economic_indicators_eu_spark.materialize.incremental import open_stored
-    from dbt_economic_indicators_eu_spark.materialize.run import run_models, stored_shape
+    from dbt_economic_indicators_eu_spark.materialize.run import (
+        Relations,
+        run_models,
+        stored_shape,
+        warehouse_base,
+    )
     from dbt_economic_indicators_eu_spark.plans.registry import Registry
 
     reg = Registry()
@@ -197,7 +202,7 @@ def test_run_models_target_namespacing(spark, tmp_path):
         return spark.range(0).selectExpr("id", "CAST(id AS INT) AS p", "'x' AS s")
 
     wh = str(tmp_path / "wh")
-    out = run_models(reg, spark, wh, target="dev", schema="marts")
+    out = run_models(Relations(reg, spark, warehouse_base(wh, "dev", "marts")))
     assert out["t_ns_table"].count() == 3
     assert os.path.isdir(os.path.join(wh, "dev_marts", "t_ns_table"))
     assert not os.path.exists(os.path.join(wh, "marts"))
@@ -210,7 +215,7 @@ def test_run_models_target_namespacing(spark, tmp_path):
     assert out["t_ns_empty"].count() == 0
     _same_relation(out["t_ns_empty"], empty)
 
-    run_models(reg, spark, wh, target="prod", schema="marts")
+    run_models(Relations(reg, spark, warehouse_base(wh, "prod", "marts")))
     assert os.path.isdir(os.path.join(wh, "marts", "t_ns_table"))
 
 
@@ -371,7 +376,11 @@ def test_snapshot_rowless_prior_recovers(spark, tmp_path):
     import os
 
     from dbt_economic_indicators_eu_spark.materialize.incremental import open_stored
-    from dbt_economic_indicators_eu_spark.materialize.run import run_models, stored_shape
+    from dbt_economic_indicators_eu_spark.materialize.run import (
+        Relations,
+        run_models,
+        stored_shape,
+    )
     from dbt_economic_indicators_eu_spark.plans.registry import Registry
 
     wh = str(tmp_path / "wh")
@@ -392,7 +401,7 @@ def test_snapshot_rowless_prior_recovers(spark, tmp_path):
         return reg
 
     reg0 = build(0)
-    out1 = run_models(reg0, spark, wh, now="2024-01-01 00:00:00", select=["snap"])
+    out1 = run_models(Relations(reg0, spark, wh), now="2024-01-01 00:00:00", select=["snap"])
     # rowless read-back still exposes the stored-relation schema
     assert {"valid_from", "valid_to", "is_current"} <= set(out1["snap"].columns)
     assert out1["snap"].count() == 0
@@ -404,7 +413,7 @@ def test_snapshot_rowless_prior_recovers(spark, tmp_path):
     # second run over real rows: footer probe reads the rowless prior
     # as first-run instead of crashing
     out2 = run_models(
-        build(3), spark, wh, now="2024-02-01 00:00:00", select=["snap"]
+        Relations(build(3), spark, wh), now="2024-02-01 00:00:00", select=["snap"]
     )
     rows = out2["snap"].collect()
     assert len(rows) == 3 and all(r.is_current for r in rows)

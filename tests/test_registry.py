@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from dbt_economic_indicators_eu_spark.materialize.run import run_models
+from dbt_economic_indicators_eu_spark.materialize.run import Relations, run_models
 from dbt_economic_indicators_eu_spark.plans.registry import Registry, RegistryError
 from dbt_economic_indicators_eu_spark.testing.contracts import ContractViolation
 
@@ -109,7 +109,7 @@ def test_run_models_all_materializations(spark, tmp_path):
     def s_model(ctx):
         return ctx.ref("v_model")
 
-    out = run_models(reg, spark, wh, now=dt.datetime(2024, 1, 1))
+    out = run_models(Relations(reg, spark, wh), now=dt.datetime(2024, 1, 1))
     assert out["t_model"].count() == 2
     assert out["i_model"].count() == 2
     assert out["s_model"].filter(F.col("is_current")).count() == 2
@@ -134,7 +134,7 @@ def test_run_models_all_materializations(spark, tmp_path):
                 name=name, build=make(name), materialization=mat, **kw
             )
         )
-    out2 = run_models(reg2, spark, wh, select=["i_model", "s_model"], now=dt.datetime(2024, 2, 1))
+    out2 = run_models(Relations(reg2, spark, wh), select=["i_model", "s_model"], now=dt.datetime(2024, 2, 1))
     got = {r["k"]: r["v"] for r in out2["i_model"].collect()}
     assert got == {"k1": 99.0, "k2": 20.0, "k3": 30.0}
     snap = out2["s_model"]
@@ -172,12 +172,12 @@ def test_selected_run_reads_stored_unselected_upstream(spark, tmp_path, threads)
 
         return reg
 
-    run_models(build_reg([("k1", 1.0), ("k2", 2.0)]), spark, wh,
+    run_models(Relations(build_reg([("k1", 1.0), ("k2", 2.0)]), spark, wh),
                now=dt.datetime(2024, 1, 1), threads=threads)
 
     # source moves on to a NEW batch; only the mart is selected, so
     # i_up must come from the warehouse (k1,k2), not a k3-only recompute
-    out = run_models(build_reg([("k3", 3.0)]), spark, wh,
+    out = run_models(Relations(build_reg([("k3", 3.0)]), spark, wh),
                      select=["mart"], now=dt.datetime(2024, 2, 1),
                      threads=threads)
     assert {r["k"] for r in out["mart"].collect()} == {"k1", "k2"}
@@ -187,7 +187,7 @@ def test_selected_run_reads_stored_unselected_upstream(spark, tmp_path, threads)
 
     # selecting the incremental itself still MERGES the new batch
     # (selected names bypass the stored fallback)
-    out = run_models(build_reg([("k3", 3.0)]), spark, wh,
+    out = run_models(Relations(build_reg([("k3", 3.0)]), spark, wh),
                      select=["i_up", "mart"], now=dt.datetime(2024, 3, 1),
                      threads=threads)
     assert {r["k"] for r in out["mart"].collect()} == {"k1", "k2", "k3"}

@@ -15,7 +15,7 @@ import os
 
 import pytest
 
-from dbt_economic_indicators_eu_spark.materialize.run import run_models
+from dbt_economic_indicators_eu_spark.materialize.run import Relations, run_models
 from dbt_economic_indicators_eu_spark.plans.registry import Registry
 
 
@@ -48,7 +48,10 @@ def test_threads_identical_results(spark, tmp_path):
     rows = {}
     for threads in (1, 4):
         wh = str(tmp_path / f"wh{threads}")
-        out = run_models(_indep_registry(), spark, wh, threads=threads)
+        store = Relations(_indep_registry(), spark, wh)
+        out = run_models(store, threads=threads)
+        # pool threads put every written relation into the store
+        assert store.stored == out
         rows[threads] = {
             name: sorted(map(tuple, df.collect())) for name, df in out.items()
         }
@@ -60,7 +63,7 @@ def test_threads_child_reads_materialized_parent(spark, tmp_path):
     """Stored-relation semantics survive the concurrent scheduler: the
     child's plan must scan the PARENT'S PARQUET, not recompute it."""
     wh = str(tmp_path / "wh")
-    out = run_models(_indep_registry(), spark, wh, threads=4)
+    out = run_models(Relations(_indep_registry(), spark, wh), threads=4)
     plan = out["child"]._jdf.queryExecution().executedPlan().toString()
     # child was returned as a scan of its own artifact
     assert "child" in plan and "Scan parquet" in plan
@@ -114,7 +117,7 @@ def test_threads_writes_overlap(spark, tmp_path):
     def intervals(wh, threads):
         for f in os.listdir(marker_dir):
             os.remove(os.path.join(marker_dir, f))
-        run_models(build_reg(barrier=threads > 1), spark, str(wh), threads=threads)
+        run_models(Relations(build_reg(barrier=threads > 1), spark, str(wh)), threads=threads)
         out = {}
         for name in ("a", "b"):
             with open(os.path.join(marker_dir, name)) as f:
@@ -174,7 +177,7 @@ def test_threads_transitive_dep_through_unselected_view(spark, tmp_path):
         return ctx.ref("vB").coalesce(1).mapInPandas(fast, "id long")
 
     out = run_models(
-        reg, spark, str(tmp_path / "wh"), select=["tC", "tA"], threads=4
+        Relations(reg, spark, str(tmp_path / "wh")), select=["tC", "tA"], threads=4
     )
     assert sorted(map(tuple, out["tA"].collect())) == [(0,), (1,), (2,)]
     with open(os.path.join(marker_dir, "C")) as f:
@@ -382,7 +385,7 @@ def test_serial_select_is_dependency_ordered(spark, tmp_path):
         return ctx.ref("fct_incr").groupBy().count()
 
     # seed history the fresh recompute would NOT contain
-    run_models(reg, spark, wh, select=["fct_incr"], threads=1)
+    run_models(Relations(reg, spark, wh), select=["fct_incr"], threads=1)
 
     reg2 = Registry()
 
@@ -395,17 +398,18 @@ def test_serial_select_is_dependency_ordered(spark, tmp_path):
         return ctx.ref("fct_incr").groupBy().count()
 
     # mart listed FIRST — serial path must reorder it after fct_incr
-    out = run_models(reg2, spark, wh, select=["mart", "fct_incr"], threads=1)
+    out = run_models(Relations(reg2, spark, wh), select=["mart", "fct_incr"], threads=1)
     assert out["mart"].collect()[0][0] == 5  # 3 history + 2 new
 
 
 def test_probe_build_only_when_edges_can_change_the_schedule(spark, tmp_path):
     """One scheduler for every thread count: edges are probe-harvested
-    (a throwaway build of every selected plan) only when they can
+    (a throwaway build of every plan) only when they can
     change the schedule. A one-model run at threads=4 and a
     declaration-order run at threads=1 build each plan exactly once;
     an out-of-order selection probes, runs dependency-ordered and
-    returns models in selection order."""
+    returns models in selection order, and on a store whose graph is
+    already harvested it builds each plan once."""
     from collections import Counter
 
     calls: Counter = Counter()
@@ -422,17 +426,29 @@ def test_probe_build_only_when_edges_can_change_the_schedule(spark, tmp_path):
         return ctx.ref("up").selectExpr("id * 2 AS id")
 
     wh = str(tmp_path / "wh")
-    run_models(reg, spark, wh, select=["up"], threads=4)
+    run_models(Relations(reg, spark, wh), select=["up"], threads=4)
     assert calls == {"up": 1}
 
     calls.clear()
-    out = run_models(reg, spark, wh, select=["up", "down"], threads=1)
+    out = run_models(Relations(reg, spark, wh), select=["up", "down"], threads=1)
     assert calls == {"up": 1, "down": 1}
     assert sorted(r.id for r in out["down"].collect()) == [0, 2, 4]
 
     calls.clear()
-    out = run_models(reg, spark, wh, select=["down", "up"], threads=1)
+    out = run_models(Relations(reg, spark, wh), select=["down", "up"], threads=1)
     assert calls == {"up": 2, "down": 2}  # probe build + real build
+    assert list(out) == ["down", "up"]
+    assert sorted(r.id for r in out["down"].collect()) == [0, 2, 4]
+
+    # a store whose graph the command already harvested (a graph
+    # selector did) schedules from it: no second probe build
+    store = Relations(reg, spark, wh)
+    assert store.graph["down"] == {"up"}
+    assert set(store.stored) == {"up"}  # the harvest opens only what a plan refs
+    calls.clear()
+    out = run_models(store, select=["down", "up"], threads=1)
+    assert calls == {"up": 1, "down": 1}
+    assert list(calls) == ["up", "down"]  # build order: dependency order
     assert list(out) == ["down", "up"]
     assert sorted(r.id for r in out["down"].collect()) == [0, 2, 4]
 
@@ -477,7 +493,7 @@ def test_probe_resolves_stored_incremental_schema(spark, tmp_path):
     def _f1(ctx):
         return ctx.spark.range(2).select("id", F.lit("x").alias("extra_col"))
 
-    run_models(reg1, spark, wh, select=["fct"], threads=1)
+    run_models(Relations(reg1, spark, wh), select=["fct"], threads=1)
 
     reg2 = Registry()
 
@@ -490,6 +506,6 @@ def test_probe_resolves_stored_incremental_schema(spark, tmp_path):
         return ctx.ref("fct").select("id", "extra_col")  # stored-only column
 
     # non-topological selection forces the probe on the serial path too
-    out = run_models(reg2, spark, wh, select=["mart", "fct"], threads=2)
+    out = run_models(Relations(reg2, spark, wh), select=["mart", "fct"], threads=2)
     got = {(r.id, r.extra_col) for r in out["mart"].collect()}
     assert got == {(0, "x"), (1, "x"), (2, None), (3, None)}
