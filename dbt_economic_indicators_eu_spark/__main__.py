@@ -29,8 +29,9 @@ snapshots, and the test stage tests the whole selection.
 Each command resolves once: ``--vars`` and the clock, the registry,
 the session, and one store (``materialize.run.Relations``) that every
 stage and run_models' scheduler share: each stored relation is opened
-or written into it once, and its dependency graph is harvested at most
-once (for a graph selector, the docs manifest's edges, or a run whose
+or written into it once, and each model's plan is probe-built for its
+dependency edges at most once (every model for a graph selector or the
+docs manifest's edges, the selection's upstream closure for a run whose
 schedule needs edges). Each raw source is read once.
 """
 
@@ -160,7 +161,8 @@ class Invocation(argparse.Namespace):
     @functools.cached_property
     def relations(self):
         """The command's one store of relations opened or written, and
-        its one dependency graph (dbt's relation cache and manifest)."""
+        its one probe context for dependency edges (dbt's relation
+        cache and manifest)."""
         from .materialize.run import Relations
 
         return Relations(self.reg, self.spark, self.base, self.run_vars)
@@ -182,7 +184,7 @@ class Invocation(argparse.Namespace):
         tokens choose — every node when there are none — minus what the
         ``--exclude`` tokens choose, with the same syntax. None when
         neither is given (unscoped). Only a graph operator harvests the
-        graph, and only once per command."""
+        graph."""
         exclude = self.exclude_nodes or []
         if not select and not exclude:
             return None

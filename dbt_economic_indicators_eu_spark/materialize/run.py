@@ -179,8 +179,9 @@ class Relations:
     command and by run_models' scheduler: the registry, session,
     warehouse base (``warehouse_base``) and run vars it was built from,
     one dict of stored relations, the stored resolver over it, and one
-    lazy dependency graph. Pool threads reach it only under run_models'
-    ``build_lock``."""
+    probe context that harvests dependency edges lazily, only for the
+    roots a caller asks for. Pool threads reach it only under
+    run_models' ``build_lock``."""
 
     def __init__(self, registry: Registry, spark: SparkSession, base: str,
                  vars: dict | None = None) -> None:
@@ -209,14 +210,21 @@ class Relations:
         return self.stored[name]
 
     @functools.cached_property
-    def graph(self) -> dict[str, set]:
-        """model → direct upstreams, harvested once with the run vars
-        and the stored resolver (so a vars-conditional ref gives the
-        edge the run takes, and a plan selecting stored-only columns
-        analyzes)."""
-        return self.registry.dependency_graph(
-            self.spark, vars=self.vars, stored_resolver=self.resolver
+    def probe(self) -> Context:
+        """The command's one probe context (edge harvest), built with
+        the run vars and the stored resolver (so a vars-conditional ref
+        gives the edge the run takes, and a plan selecting stored-only
+        columns analyzes). It memoizes each plan it builds, so no plan
+        is probe-built twice in one command."""
+        return self.registry.context(
+            self.spark, vars=self.vars, probe=True, stored_resolver=self.resolver
         )
+
+    @property
+    def graph(self) -> dict[str, set]:
+        """Every model's direct upstreams, for graph selectors and the
+        docs manifest."""
+        return self.probe.harvest(self.registry.models)
 
 
 def _selected_upstream_map(graph: dict[str, set], names: list[str]) -> dict[str, set]:
@@ -315,13 +323,14 @@ def run_models(
     # One scheduler for every thread count: a model is submitted once
     # every SELECTED upstream it waits on has materialized, so its plan
     # (built inside _materialize_one) refs the STORED relation. Edges
-    # come from the store's graph (harvested once per store: every
-    # plan built once to collect refs, then discarded; its stored reads
-    # and source schema inference cost Spark jobs) only when they can
-    # change the schedule: a selection out of registry declaration
-    # order (a mart listed before its incremental upstream would
-    # otherwise build from a fresh single-batch recompute), or several
-    # models that could overlap. Otherwise the declaration-order chain
+    # come from the store's probe context (the selection and its
+    # upstream closure, each plan built at most once per store to
+    # collect refs, then discarded; its stored reads and source schema
+    # inference cost Spark jobs) only when they can change the
+    # schedule: a selection out of registry declaration order (a mart
+    # listed before its incremental upstream would otherwise build from
+    # a fresh single-batch recompute), or several models that could
+    # overlap. Otherwise the declaration-order chain
     # is exact, since any subsequence of declaration order is
     # topological; this covers a serial all-models run, the CLI's
     # declaration-ordered lists at --threads 1, and every one-model run.
@@ -330,7 +339,7 @@ def run_models(
         decl[a] < decl[b] for a, b in zip(names, names[1:]) if a in decl and b in decl
     )
     if not in_decl_order or (threads > 1 and len(names) > 1):
-        upstream = _selected_upstream_map(store.graph, names)
+        upstream = _selected_upstream_map(store.probe.harvest(names), names)
     else:
         upstream = {n: set(names[:i]) for i, n in enumerate(names)}
 

@@ -278,12 +278,7 @@ class Registry:
         so conditional refs resolve the way the real run will and a
         plan selecting stored-only columns analyzes."""
         ctx = self.context(spark, vars=vars, probe=True, stored_resolver=stored_resolver)
-        for name in self._models:
-            ctx.ref(name)
-        out = {n: set(v) for n, v in ctx.deps.items()}
-        for name in self._models:
-            out.setdefault(name, set())
-        return out
+        return ctx.harvest(self._models)
 
     def expand_selection(
         self,
@@ -399,6 +394,16 @@ class Context:
     # optional name -> stored DataFrame | None hook (make_stored_resolver)
     _stored_resolver: "Callable[[str], DataFrame | None] | None" = None
 
+    def harvest(self, roots: Iterable[str]) -> dict[str, set]:
+        """model → direct upstreams (models and sources) over ``roots``
+        and their upstream closure, recorded as each LAZY plan builds —
+        no execution, just py4j plan construction. ``ref`` memoizes, so
+        a plan this context already built is not built again: harvests
+        of several root sets on one context build each plan once."""
+        for name in roots:
+            self.ref(name)
+        return {n: set(v) for n, v in self.deps.items()}
+
     def _record_edge(self, name: str) -> None:
         if self._building:
             self.deps.setdefault(self._building[-1], set()).add(name)
@@ -443,6 +448,7 @@ class Context:
                 if stored is not None:
                     self._cache[f"m:{name}"] = stored
                     return stored
+            self.deps.setdefault(name, set())  # a node even if it refs nothing
             self._building.append(name)
             try:
                 df = model.build(self)

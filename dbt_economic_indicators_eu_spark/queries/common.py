@@ -28,12 +28,15 @@ Float-parity discipline (SURVEY.md §4), learned the hard way:
 
 from __future__ import annotations
 
+import atexit
 import glob
 import json
 import os
 import re
+import shutil
+import tempfile
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,29 +49,77 @@ from ..session import process_cpus
 # historically import it from this module
 from ..tableset import TABLES  # noqa: F401
 
+T = TypeVar("T")
 
-# (applicationId, session identity, sf_dir, table) → analyzed scan
-# DataFrame. A DataFrame
-# is an immutable logical plan, so reusing it across queries is safe;
-# without the cache every query re-lists the path and re-reads parquet
-# footers during analysis (~20-50ms × 67 queries × 1-3 tables — the
-# single-node analogue of having no metastore). Keyed by applicationId
-# so a new session never sees another session's plans; the id(spark)
-# term keeps SparkSession.newSession() siblings apart too (same appId,
-# separate session-scoped confs like nanosAsLong).
-#
-# Liveness invariant (applies to _PLAN_CACHE and datapipe._PAIRS_CACHE
-# too): entries are never evicted, and each cached DataFrame holds a
-# strong reference to its SparkSession — which is exactly what makes
-# the id(spark) key collision-safe (a live entry keeps the session
-# alive, so its id cannot be reused by a new session). Any future
-# eviction scheme must drop the FRAME together with the KEY (e.g. a
-# WeakKeyDictionary keyed on the session object with an inner
-# (sf_dir, name) dict); dropping frames while keeping keys would
-# reopen id-reuse collisions. Unbounded growth is bounded in practice
-# by sessions × tables/queries — a process that churns many sessions
-# should recycle one session per dataset instead.
-_SCAN_CACHE: dict[tuple[str, int, str, str], DataFrame] = {}
+
+# (application id, session identity, *key) → (session, value); see
+# session_memo
+_MEMO: dict[tuple, tuple[SparkSession, object]] = {}
+
+
+def session_memo(
+    spark: SparkSession,
+    key: tuple,
+    build: Callable[[], T],
+    valid: Callable[[T], bool] = lambda value: True,
+) -> T:
+    """What a session reuses across query calls: ``build()``'s value,
+    made once per ``(applicationId, id(spark), *key)`` and rebuilt only
+    when ``valid(value)`` is false. The one cache of the query layer:
+    scans (``load``), plans (``_cached_builder``), the verified dedup
+    pairs, the REST extracts, and the scratch directories of
+    ``session_scratch``.
+
+    The application id keeps a new session's entries apart from a
+    stopped one's; the ``id(spark)`` term keeps
+    ``SparkSession.newSession()`` siblings apart (same application,
+    own temp views and session confs such as nanosAsLong).
+
+    Liveness rule: entries are never evicted, and each stores its
+    session beside its value. A live entry therefore keeps its session
+    alive, so the session's id cannot be reused by a new session while
+    the key exists; this holds for every entry, path-valued ones too.
+    Any eviction scheme must drop the value, the session and the key
+    together (e.g. a WeakKeyDictionary keyed on the session); keeping
+    a key after dropping its session would reopen id-reuse collisions.
+    Growth is bounded by sessions × keys; a process that churns many
+    sessions should recycle one session per dataset instead."""
+    full = (spark.sparkContext.applicationId, id(spark), *key)
+    hit = _MEMO.get(full)
+    if hit is None or not valid(hit[1]):
+        hit = _MEMO[full] = (spark, build())
+    return hit[1]
+
+
+def session_scratch(
+    spark: SparkSession,
+    key: tuple,
+    fill: Callable[[str], None] | None = None,
+    mkdtemp: Callable[[str], str] = lambda prefix: tempfile.mkdtemp(prefix=prefix),
+) -> str:
+    """A scratch directory a session reuses across query calls:
+    ``mkdtemp(prefix)`` makes it (``<key[0]>_…``), ``fill(path)``
+    populates it once, and it is rebuilt when it has gone (removed by
+    hand or by a tmp cleaner). Every one is removed at process exit by
+    ``_sweep_scratch``, so per-process scratch cannot accumulate in
+    /tmp or /dev/shm across gate and bench invocations."""
+
+    def build() -> str:
+        path = mkdtemp(f"{key[0]}_")
+        if fill is not None:
+            fill(path)
+        return path
+
+    return session_memo(spark, ("scratch", *key), build, valid=os.path.isdir)
+
+
+@atexit.register
+def _sweep_scratch() -> None:
+    """THE exit sweep of the query layer: every ``session_scratch``
+    directory."""
+    for full, (_, path) in list(_MEMO.items()):
+        if full[2] == "scratch":
+            shutil.rmtree(path, ignore_errors=True)
 
 
 # Shared integer micro-unit scale for log-score quantization
@@ -182,9 +233,9 @@ _US_PER_DAY = 86_400_000_000
 
 def legacy_nanos_to_ntz(c_name: str) -> Column:
     """Reconstruct TIMESTAMP_NTZ micros from a legacy nanos-as-long
-    column — THE shared twin for batch ``load()`` and the streaming
-    source (one definition, or a change silently diverges batch from
-    stream and both from the oracle).
+    column — the nanos branch of ``ts_to_ntz``, which batch ``load()``
+    and the streaming source share (one definition, or a change
+    silently diverges batch from stream and both from the oracle).
 
     Integer ``div`` (ns longs ~1.7e18 overflow double precision),
     which TRUNCATES TOWARD ZERO for pre-epoch values — deliberately:
@@ -227,47 +278,63 @@ def epoch_micros(c: Column) -> Column:
     return days * F.lit(_US_PER_DAY) + micros_of_day
 
 
+def raw_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One synthetic parquet table as stored, read once per session
+    with the confs ``load`` needs. ``events_stream`` takes its read
+    schema from here: a session that loaded the table pays no extra
+    footer job."""
+
+    def read() -> DataFrame:
+        # Self-contained: the driver supplies its own SparkSession, so
+        # these runtime SQL confs must be set here, not only in
+        # session.get_spark — otherwise TIMESTAMP(NANOS) parquet raises
+        # PARQUET_TYPE_ILLEGAL.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+        # Pin UTC too: ts itself is NTZ (tz-free), but the few places
+        # that MUST cast to LTZ (streaming watermarks, timestamp
+        # literals in engine queries) are only wall-clock identities
+        # under UTC — a driver session inheriting a non-UTC machine
+        # zone would silently shift them. The oracle (DuckDB naive
+        # timestamps) assumes UTC.
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+    return session_memo(spark, ("raw_scan", sf_dir, name), read)
+
+
+def ts_to_ntz(df: DataFrame) -> DataFrame:
+    """THE ``events.ts`` normalization, shared by batch ``load`` and
+    ``streaming.pipeline.events_stream``: whatever the parquet encoding,
+    ``ts`` becomes TIMESTAMP_NTZ. Under ``raw_scan``'s confs the read
+    type names the encoding: ``bigint`` is legacy TIMESTAMP(NANOS) read
+    as a long (``legacy_nanos_to_ntz``, truncating to µs; tz-adjusted
+    nanos included, the long being the UTC instant), ``timestamp`` is
+    INT96 or tz-adjusted micros (cast to NTZ, the identity reinterpret
+    under the pinned UTC zone), and ``timestamp_ntz`` is micros without
+    tz (current testdata), left as read."""
+    kind = dict(df.dtypes).get("ts")
+    if kind == "bigint":
+        return df.withColumn("ts", legacy_nanos_to_ntz("ts"))
+    if kind == "timestamp":
+        return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one synthetic parquet table (column pruning + predicate
-    pushdown happen automatically downstream of this lazy scan).
+    pushdown happen automatically downstream of this lazy scan),
+    memoized per session: without it every query re-lists the path and
+    re-reads parquet footers during analysis (~20-50ms × 67 queries ×
+    1-3 tables — the single-node analogue of having no metastore).
 
-    ``events.ts`` is normalized to TIMESTAMP_NTZ — the tz-free wall
-    clock that DuckDB's naive TIMESTAMP also uses, so the oracle's
-    ``CAST(ts AS TIMESTAMP)`` sees identical values. Two physical
-    encodings are handled: parquet TIMESTAMP(MICROS, no-tz) reads as
-    NTZ directly (current testdata), and legacy TIMESTAMP(NANOS) reads
-    as a long (``nanosAsLong``) truncated to µs (see legacy_nanos_to_ntz).
+    ``events.ts`` is normalized to TIMESTAMP_NTZ (``ts_to_ntz``) — the
+    tz-free wall clock that DuckDB's naive TIMESTAMP also uses, so the
+    oracle's ``CAST(ts AS TIMESTAMP)`` sees identical values.
     """
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # Self-contained: the driver supplies its own SparkSession, so these
-    # runtime SQL confs must be set here, not only in session.get_spark —
-    # otherwise TIMESTAMP(NANOS) parquet raises PARQUET_TYPE_ILLEGAL.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-    # Pin UTC too: ts itself is NTZ (tz-free), but the few places that
-    # MUST cast to LTZ (streaming watermarks, timestamp literals in
-    # engine queries) are only wall-clock identities under UTC — a
-    # driver session inheriting a non-UTC machine zone would silently
-    # shift them. The oracle (DuckDB naive timestamps) assumes UTC.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for field in df.schema.fields:
-        if field.name != "ts":
-            continue
-        kind = field.dataType.simpleString()
-        if kind == "bigint":
-            # legacy nanos-as-long (shared twin — truncation semantics
-            # documented on the helper)
-            df = df.withColumn("ts", legacy_nanos_to_ntz("ts"))
-        elif kind == "timestamp":
-            # only reachable if a driver session disabled NTZ inference;
-            # sessions pin UTC so this cast is the identity reinterpret
-            df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    _SCAN_CACHE[key] = df
-    return df
+    return session_memo(
+        spark, ("scan", sf_dir, name), lambda: ts_to_ntz(raw_scan(spark, sf_dir, name))
+    )
 
 
 # DuckDB-side normalization of events.ts (TIMESTAMP_NS → µs, floor) to
@@ -382,17 +449,12 @@ class QueryDef:
     effectful: bool = False
 
 
-# (applicationId, session identity, sf_dir, query name) → built
-# DataFrame (logical plan). The session identity term matters because
-# SparkSession.newSession() shares the applicationId but has its own
-# temp-view/conf state; a cached frame must never cross sessions.
-# Caveat (inherent to plan caching): confs read at BUILD time (e.g. a
-# repartition width derived from shuffle.partitions) are frozen into
-# the cached plan — a conf sweep needs a fresh session.
-_PLAN_CACHE: dict[tuple[str, int, str, str], DataFrame] = {}
-
-
 def _cached_builder(q: "QueryDef") -> Callable[[SparkSession, str], DataFrame]:
+    # The built frame (logical plan) is memoized per (session, sf_dir,
+    # query name). Caveat (inherent to plan caching): confs read at
+    # BUILD time (e.g. a repartition width derived from
+    # shuffle.partitions) are frozen into the cached plan — a conf
+    # sweep needs a fresh session.
     # CACHE INVARIANT: every ACTION on a cached frame re-executes the
     # full scan/shuffle/compute — which is only true while no cached
     # plan persists state across actions. A plan embedding a (lazy)
@@ -404,12 +466,7 @@ def _cached_builder(q: "QueryDef") -> Callable[[SparkSession, str], DataFrame]:
         return q.builder
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, id(spark), sf_dir, q.name)
-        df = _PLAN_CACHE.get(key)
-        if df is None:
-            df = q.builder(spark, sf_dir)
-            _PLAN_CACHE[key] = df
-        return df
+        return session_memo(spark, ("plan", sf_dir, q.name), lambda: q.builder(spark, sf_dir))
 
     return build
 

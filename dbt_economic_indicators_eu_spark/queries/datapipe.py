@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import QueryDef, load, md5_bucket, md5_bucket_sql, widen_narrow_scan
+from .common import QueryDef, load, md5_bucket, md5_bucket_sql, session_memo, widen_narrow_scan
 from ..operators.banding import HOT_BUCKET_CAP, candidate_pairs
 
 # --------------------------------------------------------------------------
@@ -718,29 +718,20 @@ FROM (SELECT doc_id, coalesce(text, '') AS text FROM documents) d
 
 _CC_MAX_ITERS = 20
 
-# (applicationId, session identity, sf_dir) → eagerly-materialized
-# verified near-dup pair table. Clustering is a DOWNSTREAM model of
-# pair verification (exactly the registry's table-materialization
-# semantics): the shingle→minhash→band→verify pipeline runs once per
-# dataset and its few-row result feeds every consumer, instead of
-# re-deriving ~2s of upstream plan inside each downstream query. The
-# id(spark) term keeps SparkSession.newSession() siblings apart; the
-# cached frame pins its session, which is what keeps id reuse
-# impossible while an entry lives (see queries/common.py cache note).
-_PAIRS_CACHE: dict[tuple[str, int, str], DataFrame] = {}
-
-
 def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir)
-    pairs = _PAIRS_CACHE.get(key)
-    if pairs is None:
-        pairs = (
-            q_dedup_minhash(spark, sf_dir)
-            .select("doc_id_a", "doc_id_b")
-            .localCheckpoint(eager=True)
-        )
-        _PAIRS_CACHE[key] = pairs
-    return pairs
+    """The eagerly-materialized verified near-dup pair table, once per
+    (session, sf_dir) (``session_memo``). Clustering is a DOWNSTREAM
+    model of pair verification (exactly the registry's
+    table-materialization semantics): the shingle→minhash→band→verify
+    pipeline runs once per dataset and its few-row result feeds every
+    consumer, instead of re-deriving ~2s of upstream plan inside each
+    downstream query."""
+    return session_memo(
+        spark, ("verified_pairs", sf_dir),
+        lambda: q_dedup_minhash(spark, sf_dir)
+        .select("doc_id_a", "doc_id_b")
+        .localCheckpoint(eager=True),
+    )
 
 
 def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -83,9 +83,9 @@ def _lit_array(xs: list[float]) -> Column:
 
 def _plane_buckets_np(planes: list[list[float]], v: np.ndarray) -> np.ndarray:
     """Sign-of-dot bucket ids (bit j = sign of dot with plane j) — the
-    ONE implementation of the bucket formula, shared by the pandas UDF,
-    the fused LSH scan, and the tests, and kept in lockstep with
-    ``_oracle_bucket_sql``."""
+    ONE implementation of the bucket formula, shared by the pandas UDFs
+    (LSH and per-table dedup), the fused LSH scan, and the tests, and
+    kept in lockstep with ``_oracle_bucket_sql``."""
     mat = np.array(planes)
     shifts = np.array([1 << j for j in range(len(planes))])
     return (((v @ mat.T) > 0) * shifts).sum(axis=1)
@@ -388,10 +388,11 @@ def q_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_bucket_sql(vcol: str) -> str:
+def _oracle_bucket_sql(vcol: str, planes: list[list[float]]) -> str:
+    """DuckDB twin of ``_plane_buckets_np``."""
     terms = [
         f"CASE WHEN list_dot_product({vcol}, {_sql_array(p)}) > 0 THEN {1 << j} ELSE 0 END"
-        for j, p in enumerate(_PLANES)
+        for j, p in enumerate(planes)
     ]
     return "CAST(" + " + ".join(terms) + " AS INTEGER)"
 
@@ -399,7 +400,7 @@ def _oracle_bucket_sql(vcol: str) -> str:
 ORACLE_LSH_BUCKETS = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
            WHERE embedding IS NOT NULL)
-SELECT {_oracle_bucket_sql("v")} AS bucket_id, count(*) AS n_vecs
+SELECT {_oracle_bucket_sql("v", _PLANES)} AS bucket_id, count(*) AS n_vecs
 FROM e
 GROUP BY 1
 """
@@ -441,7 +442,7 @@ WITH e AS (
 ),
 n AS (
   SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
-         {_oracle_bucket_sql("v")} AS bucket_id
+         {_oracle_bucket_sql("v", _PLANES)} AS bucket_id
   FROM e WHERE sqrt(list_dot_product(v, v)) > 0
 ),
 q AS (
@@ -498,28 +499,25 @@ _DEDUP_PLANES = [
 
 
 def _dedup_buckets_udf():
-    """Arrow-vectorized bucket assignment: one (n × 64) @ (64 × 32)
-    matmul per batch instead of 32 interpreted ``aggregate(zip_with)``
-    folds per ROW (higher-order functions are not codegen'd — the HOF
-    form measured 3.3s at sf0.1, this ~0.1s). Only the SIGN of each
-    plane dot feeds the bucket, and the smallest |dot| across every
-    vector×plane in the test corpus is 5.3e-6 — nine orders above
-    summation-order noise (~1e-15) — so numpy's pairwise summation is
-    sign-identical to the oracle's sequential ``list_dot_product``.
-    The parity-critical COSINE verify below still uses the ordered
-    JVM fold (queries/common.py float discipline)."""
-    planes = np.array([p for table in _DEDUP_PLANES for p in table])  # 32 x 64
-    shifts = np.array([1 << j for j in range(_DEDUP_PLANES_PER_TABLE)])
+    """Arrow-vectorized bucket assignment: one (n × 64) @ (64 × 8)
+    matmul per table per batch (``_plane_buckets_np``) instead of 32
+    interpreted ``aggregate(zip_with)`` folds per ROW (higher-order
+    functions are not codegen'd — the HOF form measured 3.3s at sf0.1,
+    this ~0.1s). Only the SIGN of each plane dot feeds the bucket, and
+    the smallest |dot| across every vector×plane in the test corpus is
+    5.3e-6 — nine orders above summation-order noise (~1e-15) — so
+    numpy's pairwise summation is sign-identical to the oracle's
+    sequential ``list_dot_product``. The parity-critical COSINE verify
+    below still uses the ordered JVM fold (queries/common.py float
+    discipline)."""
 
     @F.pandas_udf("array<int>")
     def buckets(emb: pd.Series) -> pd.Series:
         if emb.empty:
             return pd.Series([], dtype=object)
         v = np.stack(emb.to_numpy()).astype(np.float64)  # n x 64
-        bits = (v @ planes.T) > 0  # n x (tables*planes)
-        bits = bits.reshape(len(v), _DEDUP_TABLES, _DEDUP_PLANES_PER_TABLE)
-        ids = (bits * shifts).sum(axis=2).astype(np.int32)  # n x tables
-        return pd.Series(list(ids))
+        ids = np.stack([_plane_buckets_np(table, v) for table in _DEDUP_PLANES], axis=1)
+        return pd.Series(list(ids.astype(np.int32)))  # n x tables
 
     return buckets
 
@@ -580,14 +578,6 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_dedup_bucket_sql(vcol: str, t: int) -> str:
-    terms = [
-        f"CASE WHEN list_dot_product({vcol}, {_sql_array(p)}) > 0 THEN {1 << j} ELSE 0 END"
-        for j, p in enumerate(_DEDUP_PLANES[t])
-    ]
-    return "CAST(" + " + ".join(terms) + " AS INTEGER)"
-
-
 ORACLE_DEDUP_EMBEDDING = f"""
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL
@@ -595,7 +585,7 @@ WITH e AS (
 n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
 src AS (
   SELECT vec_id,
-         [{", ".join(_oracle_dedup_bucket_sql("v", t) for t in range(_DEDUP_TABLES))}] AS buckets
+         [{", ".join(_oracle_bucket_sql("v", table) for table in _DEDUP_PLANES)}] AS buckets
   FROM n
 ),
 banded AS (

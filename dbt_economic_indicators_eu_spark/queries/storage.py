@@ -13,37 +13,21 @@ pruned scan) — the oracle verifies the answers are layout-invariant.
 from __future__ import annotations
 
 import hashlib
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import EVENTS_NORM_SQL, QueryDef, load, r2
+from .common import EVENTS_NORM_SQL, QueryDef, load, r2, session_scratch
 
 _N_BUCKETS = 8
 
 # Physical layout is a write-once property of the table, not part of
 # the query: bucket/partition the data the first time a (session,
-# sf_dir) pair asks for it, then every subsequent query — including
-# benchmark repetitions — measures only the read-side plan the layout
-# exists to enable. This mirrors production, where the laid-out table
-# is built by the ingest job and joined/pruned thousands of times.
-_LAYOUT_CACHE: dict[tuple[str, str, str], str] = {}
-
-
-def _ensure_layout(spark: SparkSession, kind: str, sf_dir: str, build) -> str:
-    """Write-once-per-(session, kind, sf_dir) scratch layout: on a cold
-    cache, ``build(base)`` populates a fresh temp dir; later calls
-    reuse it. ONE implementation of the cache protocol so the
-    empty-source and idempotency guards can't drift between the five
-    layout queries (they did: two read-backs grew an explicit schema,
-    two didn't)."""
-    key = _layout_key(spark, kind, sf_dir)
-    if key not in _LAYOUT_CACHE:
-        base = tempfile.mkdtemp(prefix=f"{kind}_")
-        build(base)
-        _LAYOUT_CACHE[key] = base
-    return _LAYOUT_CACHE[key]
+# sf_dir) pair asks for it (``session_scratch(spark, (kind, sf_dir),
+# build)``), then every subsequent query — including benchmark
+# repetitions — measures only the read-side plan the layout exists to
+# enable. This mirrors production, where the laid-out table is built
+# by the ingest job and joined/pruned thousands of times.
 
 
 def _hive_unescape(name: str) -> str:
@@ -56,21 +40,6 @@ def _hive_unescape(name: str) -> str:
     return _re.sub(
         "%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name
     )
-
-
-def _layout_key(spark: SparkSession, kind: str, sf_dir: str) -> tuple[str, str, str]:
-    return (spark.sparkContext.applicationId, kind, sf_dir)
-
-
-@__import__("atexit").register
-def _cleanup_layout_dirs() -> None:
-    # layout dirs hold FULL table copies; without cleanup every
-    # gate/bench/regime process on a long-lived machine leaves a new
-    # set in /tmp until the OS intervenes
-    import shutil
-
-    for base in _LAYOUT_CACHE.values():
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,7 +82,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .saveAsTable(cust_tbl)
         )
 
-    _ensure_layout(spark, "bucketed", sf_dir, build)
+    session_scratch(spark, ("bucketed", sf_dir), build)
     ob = spark.table(orders_tbl)
     cb = spark.table(cust_tbl)
     joined = ob.join(cb.hint("merge"), ob.o_custkey == cb.c_custkey)
@@ -144,8 +113,8 @@ def q_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer to 'incremental models re-read history': time-partition the
     target and every watermark filter prunes to the new partitions."""
     ev = load(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
-    base = _ensure_layout(
-        spark, "partitioned", sf_dir,
+    base = session_scratch(
+        spark, ("partitioned", sf_dir),
         lambda base: ev.write.mode("overwrite")
         .partitionBy("event_date")
         .parquet(f"{base}/events_p"),
@@ -306,7 +275,7 @@ def q_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema=ev.schema,
         )
 
-    base = _ensure_layout(spark, "delete_target", sf_dir, build)
+    base = session_scratch(spark, ("delete_target", sf_dir), build)
     # explicit schema (the catalog schema in production): an EMPTY
     # source writes no partition directories, so inference would fail
     back = spark.read.schema(ev.schema).parquet(f"{base}/events_d")
@@ -370,7 +339,7 @@ def q_purge_escaped_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             partition_col="type_day",
         )
 
-    base = _ensure_layout(spark, "purge_escaped", sf_dir, build)
+    base = session_scratch(spark, ("purge_escaped", sf_dir), build)
     back = spark.read.schema(ev.schema).parquet(f"{base}/events_td")
     return back.groupBy("type_day").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -442,7 +411,7 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             _COMPACT_TARGET_BYTES, schema=ev.schema,
         )
 
-    base = _ensure_layout(spark, "compacted", sf_dir, build)
+    base = session_scratch(spark, ("compacted", sf_dir), build)
     # explicit schema: an empty source leaves no footers to infer from
     back = spark.read.schema(ev.schema).parquet(f"{base}/compacted")
     return back.groupBy("event_type").agg(
@@ -488,7 +457,7 @@ def q_schema_evolve_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         old.write.mode("overwrite").parquet(f"{base}/t/batch=1")
         new.write.mode("overwrite").parquet(f"{base}/t/batch=2")
 
-    base = _ensure_layout(spark, "evolved", sf_dir, build)
+    base = session_scratch(spark, ("evolved", sf_dir), build)
     # The union schema stated explicitly (the catalog schema in
     # production): footer-merging alone crashes on an EMPTY source
     # (no footers to merge — the guard the sibling layout queries

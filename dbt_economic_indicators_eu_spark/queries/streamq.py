@@ -12,15 +12,16 @@ the batch-SQL answer.
 
 from __future__ import annotations
 
-import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
 from ..streaming import pipeline as streaming
-from .common import EVENTS_NORM_SQL, QueryDef, executor_slots, load
+from .common import EVENTS_NORM_SQL, QueryDef, executor_slots, load, session_scratch
 
 
 def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,29 +235,6 @@ WHERE e.event_type = 'purchase'
 """
 
 
-_INCR_PREV_SCRATCH: str | None = None
-# (appId, session identity, sf_dir) → pristine seed-table directory.
-# The seed is a DETERMINISTIC fixture (stale values for 1/3 of the
-# keys); re-running the Spark write per call just re-times fixture
-# setup, not the merge under test — write it once, file-copy per call.
-_INCR_SEED_CACHE: dict[tuple[str, int, str], str] = {}
-
-
-@atexit.register
-def _sweep_incr_scratch() -> None:
-    """Reclaim the RAM-backed (/dev/shm) scratch this module caches
-    across calls — the seed copies and the last call's target/ckpt —
-    at process exit. ephemeral_scratch's contract is delete-afterwards;
-    per-call dirs are swept by the next call, but the cached seed and
-    the FINAL call's dir would otherwise outlive the process in tmpfs."""
-    import shutil as _shutil
-
-    for d in list(_INCR_SEED_CACHE.values()) + (
-        [_INCR_PREV_SCRATCH] if _INCR_PREV_SCRATCH else []
-    ):
-        _shutil.rmtree(d, ignore_errors=True)
-
-
 def q_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seed the target with stale values for 1/3 of the keys, then
     stream-merge ALL events via foreachBatch upsert: the final table
@@ -278,29 +256,31 @@ def q_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint would lift that restriction but costs an extra
     # full materialization pass per call — wrong trade for a bench-path
     # query whose callers (driver, bench, tests) all consume promptly.
-    global _INCR_PREV_SCRATCH
-    import shutil as _shutil
-
-    if _INCR_PREV_SCRATCH is not None:
-        _shutil.rmtree(_INCR_PREV_SCRATCH, ignore_errors=True)
-    base = streaming.ephemeral_scratch("stream_incr_")
-    _INCR_PREV_SCRATCH = base
+    calls = session_scratch(spark, ("stream_incr",), mkdtemp=streaming.ephemeral_scratch)
+    for prev in os.listdir(calls):
+        shutil.rmtree(os.path.join(calls, prev), ignore_errors=True)
+    base = tempfile.mkdtemp(dir=calls)
     target, checkpoint = f"{base}/target", f"{base}/ckpt"
 
     cols = ["event_id", "user_id", "event_type", "ts", "value"]
-    seed_key = (spark.sparkContext.applicationId, id(spark), sf_dir)
-    pristine = _INCR_SEED_CACHE.get(seed_key)
-    if pristine is None or not os.path.isdir(pristine):
-        pristine = streaming.ephemeral_scratch("stream_incr_seed_")
-        seed = (
+
+    # The seed is a DETERMINISTIC fixture (stale values for 1/3 of the
+    # keys); re-running the Spark write per call just re-times fixture
+    # setup, not the merge under test — write it once per (session,
+    # sf_dir), file-copy per call.
+    def write_seed(pristine: str) -> None:
+        (
             load(spark, sf_dir, "events")
             .filter(F.col("event_id") % 3 == 0)
             .select(*[c for c in cols if c != "value"], F.lit(-1.0).alias("value"))
             .select(*cols)
+            .write.mode("overwrite").parquet(pristine)
         )
-        seed.write.mode("overwrite").parquet(pristine)
-        _INCR_SEED_CACHE[seed_key] = pristine
-    _shutil.copytree(pristine, target)
+
+    pristine = session_scratch(
+        spark, ("stream_incr_seed", sf_dir), write_seed, mkdtemp=streaming.ephemeral_scratch
+    )
+    shutil.copytree(pristine, target)
 
     ev = streaming.events_stream(spark, sf_dir).select(*cols)
     streaming.stream_merge_incremental(ev, target, checkpoint)

@@ -37,9 +37,7 @@ def host_cpus() -> str:
 
 
 def get_spark(
-    app_name: str = "dbt-economic-indicators-eu-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) a SparkSession with engine defaults.
@@ -50,12 +48,10 @@ def get_spark(
     """
     if master is None:
         master = f"local[{host_cpus()}]"
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS))
 
     builder = (
-        SparkSession.builder.appName(app_name)
+        SparkSession.builder.appName("dbt-economic-indicators-eu-spark")
         .master(master)
         # --- optimizer / adaptive execution ---
         .config("spark.sql.adaptive.enabled", "true")

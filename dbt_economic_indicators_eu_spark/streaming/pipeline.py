@@ -39,75 +39,6 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
-    "value double, props string"
-)
-EVENTS_SCHEMA_NANOS = (
-    "event_id bigint, ts bigint, user_id bigint, event_type string, "
-    "value double, props string"
-)
-EVENTS_SCHEMA_LTZ = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-    "value double, props string"
-)
-
-
-def _events_ts_encoding(path: str) -> str:
-    """Classify the ``ts`` encoding from the parquet footer(s):
-    ``'nanos'`` (INT64 TIMESTAMP(NANOS) — needs nanosAsLong), ``'ltz'``
-    (INT96 or tz-adjusted micros — read as TIMESTAMP then reinterpret
-    to NTZ), or ``'ntz'`` (micros, isAdjustedToUTC=false — the current
-    testdata encoding, reads as TIMESTAMP_NTZ directly).
-
-    Handles both a single file and a Spark-written DIRECTORY named
-    ``events.parquet`` (footer of the first part file — one writer, one
-    encoding). Metadata-only read, no data scan. The physical type
-    disambiguates INT96 from INT64 nanos — pyarrow reports BOTH as
-    ``timestamp[ns]``.
-    """
-    import pyarrow.parquet as pq
-
-    cached = _TS_ENCODING_CACHE.get(path)
-    if cached is not None:
-        return cached
-    orig_path = path
-    if os.path.isdir(path):
-        parts = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        if not parts:
-            raise FileNotFoundError(f"no part files under {path}")
-        path = parts[0]
-    pf = pq.ParquetFile(path)
-    if pf.schema.column(pf.schema.names.index("ts")).physical_type == "INT96":
-        enc = "ltz"
-    else:
-        arrow_type = str(pf.schema_arrow.field("ts").type)
-        # nanos check FIRST: a tz-adjusted nanos column prints as
-        # 'timestamp[ns, tz=UTC]' — the tz branch would route it
-        # through the LTZ micros schema, which cannot read
-        # TIMESTAMP(NANOS) (PARQUET_TYPE_ILLEGAL / long clash). The
-        # nanos-as-long reconstruction is tz-correct for it under the
-        # pinned-UTC session (the raw int64 is the UTC instant).
-        if arrow_type.startswith("timestamp[ns"):
-            enc = "nanos"
-        elif "tz=" in arrow_type:
-            enc = "ltz"
-        else:
-            enc = "ntz"
-    _TS_ENCODING_CACHE[orig_path] = enc
-    return enc
-
-
-# path → sniffed encoding. A writer never changes a table's timestamp
-# encoding in place (appends share the footer type), so per-process
-# memoization is safe; it saves a driver-side footer read per stream
-# construction.
-_TS_ENCODING_CACHE: dict[str, str] = {}
-
 SESSION_GAP = "30 minutes"
 DEFAULT_WATERMARK = "1 hour"
 
@@ -120,7 +51,7 @@ DEFAULT_WATERMARK = "1 hour"
 # start, so it is a per-pipeline knob, not a session conf. Swept 1/4/
 # 8/16 at sf0.1: 8 minimizes the drain (1 serializes session_window's
 # sort, 16 pays extra store setup).
-DEFAULT_STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8"))
+DEFAULT_STATE_PARTITIONS = 8
 
 
 @contextmanager
@@ -176,50 +107,28 @@ def ephemeral_scratch(prefix: str) -> str:
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table.
 
-    ``ts`` lands as TIMESTAMP_NTZ, matching the batch normalization in
-    ``queries/common.py:load`` — BOTH physical encodings the driver has
-    shipped are handled (current: TIMESTAMP(MICROS, no-tz); legacy:
-    TIMESTAMP(NANOS), read as long + truncated to µs). A streaming source needs
-    its schema up front (no inference), so the encoding is sniffed from
-    the parquet footer driver-side — a metadata read, not a data scan.
-    Event-time pipelines cast to LTZ just for ``withWatermark`` (see
-    ``_with_event_time``); UTC is pinned so that cast is an identity.
+    A streaming source needs its schema up front (no inference), so it
+    takes the schema of the session's batch scan (``common.raw_scan``,
+    the one ``load()`` normalizes): a session that has loaded events
+    pays nothing, else one footer-inference job, once. ``ts`` then
+    lands as TIMESTAMP_NTZ through the same ``common.ts_to_ntz`` as
+    batch, whatever the parquet encoding. Event-time pipelines cast to
+    LTZ just for ``withWatermark`` (see ``_with_event_time``); UTC is
+    pinned so that cast is an identity.
     """
+    from ..queries.common import raw_scan, ts_to_ntz
+
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     table_path = f"{sf_dir}/events.parquet"
-    encoding = _events_ts_encoding(table_path)
-
-    def _source(schema: str) -> DataFrame:
-        # Spark-written table: events.parquet IS a directory of part
-        # files — stream the directory itself (pathGlobFilter names
-        # only direct children, so it would exclude the parts).
-        # Single-file table: the file source wants a directory, so
-        # stream sf_dir filtered down to the one file.
-        if os.path.isdir(table_path):
-            return spark.readStream.schema(schema).parquet(table_path)
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-
-    if encoding == "nanos":
-        from ..queries.common import legacy_nanos_to_ntz
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # shared twin with batch load() — one reconstruction definition
-        return _source(EVENTS_SCHEMA_NANOS).withColumn(
-            "ts", legacy_nanos_to_ntz("ts")
-        )
-    if encoding == "ltz":
-        # INT96 or tz-adjusted (isAdjustedToUTC) micros: read through
-        # an LTZ schema and normalize to NTZ — the same cast the batch
-        # load() applies; an identity reinterpret under the pinned UTC
-        # zone.
-        return _source(EVENTS_SCHEMA_LTZ).withColumn(
-            "ts", F.col("ts").cast("timestamp_ntz")
-        )
-    return _source(EVENTS_SCHEMA)
+    source = spark.readStream.schema(raw_scan(spark, sf_dir, "events").schema)
+    # Spark-written table: events.parquet IS a directory of part files
+    # — stream the directory itself (pathGlobFilter names only direct
+    # children, so it would exclude the parts). Single-file table: the
+    # file source wants a directory, so stream sf_dir filtered down to
+    # the one file.
+    if os.path.isdir(table_path):
+        return ts_to_ntz(source.parquet(table_path))
+    return ts_to_ntz(source.option("pathGlobFilter", "events.parquet").parquet(sf_dir))
 
 
 def _with_event_time(events: DataFrame, watermark: str) -> DataFrame:

@@ -743,9 +743,10 @@ def test_cli_build_resolves_once(spark, tmp_path, capsys, monkeypatch, inference
     store of stored relations, and each raw source is read once across
     every stage and probe context. A second build over its own
     warehouse passes and infers each stored relation once, besides the
-    merge target's and the snapshot prior's own fresh opens. `ls` and
-    `docs` with tag: selectors and no --raw-dir never start a
-    session."""
+    merge target's and the snapshot prior's own fresh opens. A
+    multi-model `--threads 4` run opens no stored relation outside its
+    selection's upstream closure. `ls` and `docs` with tag: selectors
+    and no --raw-dir never start a session."""
     from dbt_economic_indicators_eu_spark import session
     from dbt_economic_indicators_eu_spark.plans.registry import Registry
 
@@ -753,13 +754,14 @@ def test_cli_build_resolves_once(spark, tmp_path, capsys, monkeypatch, inference
     wh = str(tmp_path / "wh")
     _write_raw(spark, raw)
     harvests = []
-    dependency_graph = Registry.dependency_graph
+    context = Registry.context
 
-    def counting_graph(self, *args, **kwargs):
-        harvests.append(kwargs)
-        return dependency_graph(self, *args, **kwargs)
+    def counting_probe(self, *args, **kwargs):
+        if kwargs.get("probe"):
+            harvests.append(kwargs)
+        return context(self, *args, **kwargs)
 
-    monkeypatch.setattr(Registry, "dependency_graph", counting_graph)
+    monkeypatch.setattr(Registry, "context", counting_probe)
     build = ["build", "--warehouse", wh, "--raw-dir", raw,
              "--now", "2024-03-01T00:00:00", "--select", "stg_eurostat__gdp+"]
     rc = main(build)
@@ -782,6 +784,14 @@ def test_cli_build_resolves_once(spark, tmp_path, capsys, monkeypatch, inference
                    os.path.join(wh, "snap_gdp_history"): 1}  # snapshot prior
     stored = {p: n for p, n in inference_reads.items() if p.startswith(wh)}
     assert stored and all(n <= 1 + fresh_opens.get(p, 0) for p, n in stored.items()), stored
+    # a narrow multi-model run needs edges for its schedule, and probe-
+    # builds only its selection's upstream closure: the stored report
+    # only the unselected Python ports ref is never opened
+    inference_reads.clear()
+    rc = main(["run", *build[1:-2], "--select", "dim_country", "fct_economic_indicators",
+               "--threads", "4"])
+    assert rc == 0, capsys.readouterr().out
+    assert os.path.join(wh, "rpt_annual_economic_summary") not in inference_reads, inference_reads
 
     def no_session(*args, **kwargs):
         raise AssertionError("a session was started")

@@ -66,32 +66,33 @@ def test_epoch_micros_on_ntz(spark, tmp_path):
     assert got == expect
 
 
-def test_ts_encoding_sniffer_tz_adjusted_nanos(spark, tmp_path):
+def test_stream_tz_adjusted_nanos_to_ntz(spark, tmp_path):
     """A tz-adjusted TIMESTAMP(NANOS) column ('timestamp[ns, tz=UTC]')
-    must classify as 'nanos', not 'ltz': the LTZ micros schema cannot
-    read nanos parquet, while the nanos-as-long reconstruction is
-    tz-correct under the pinned-UTC session."""
-    from dbt_economic_indicators_eu_spark.streaming.pipeline import (
-        _events_ts_encoding,
-    )
+    streams through events_stream to the NTZ wall clock of its UTC
+    instant, like the batch load(): it reads as a nanos long (an LTZ
+    micros read cannot decode nanos parquet) and takes the legacy
+    reconstruction, tz-correct under the pinned-UTC session."""
+    from dbt_economic_indicators_eu_spark.streaming import pipeline as streaming
 
     d = str(tmp_path / "tzns")
     (tmp_path / "tzns").mkdir()
     t = pa.table(
         {
-            "event_id": pa.array([1], pa.int64()),
-            "ts": pa.array(
-                [dt.datetime(2025, 1, 1, 12, 0, 0, 123456)],
-                pa.timestamp("ns", tz="UTC"),
-            ),
-            "user_id": pa.array([10], pa.int64()),
-            "event_type": pa.array(["view"], pa.string()),
-            "value": pa.array([1.5], pa.float64()),
-            "props": pa.array(["{}"], pa.string()),
+            "event_id": pa.array([r[0] for r in _ROWS], pa.int64()),
+            "ts": pa.array([r[1] for r in _ROWS], pa.timestamp("ns", tz="UTC")),
+            "user_id": pa.array([r[2] for r in _ROWS], pa.int64()),
+            "event_type": pa.array([r[3] for r in _ROWS], pa.string()),
+            "value": pa.array([r[4] for r in _ROWS], pa.float64()),
+            "props": pa.array([r[5] for r in _ROWS], pa.string()),
         }
     )
     pq.write_table(t, f"{d}/events.parquet")
-    assert _events_ts_encoding(f"{d}/events.parquet") == "nanos"
+    ev = streaming.events_stream(spark, d)
+    assert dict(ev.dtypes)["ts"] == "timestamp_ntz"
+    out = streaming.run_available_now(
+        ev.select("event_id", "ts"), "t_tz_nanos_stream", output_mode="append"
+    )
+    assert {r.event_id: r.ts for r in out.collect()} == {r[0]: r[1] for r in _ROWS}
 
 
 def test_legacy_nanos_truncates_toward_zero_like_duckdb(spark, tmp_path):

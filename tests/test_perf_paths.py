@@ -110,12 +110,12 @@ def test_storage_layout_cache_reuses_write(spark):
     """Second invocation against the same (session, sf_dir) must not
     rewrite the layout — the cached base dir is reused."""
     from dbt_economic_indicators_eu_spark.queries import storage
+    from dbt_economic_indicators_eu_spark.queries.common import session_scratch
 
     storage.q_partition_pruned(spark, SF_A).count()
-    key = storage._layout_key(spark, "partitioned", SF_A)
-    base1 = storage._LAYOUT_CACHE[key]
+    base1 = session_scratch(spark, ("partitioned", SF_A))
     storage.q_partition_pruned(spark, SF_A).count()
-    assert storage._LAYOUT_CACHE[key] is base1
+    assert session_scratch(spark, ("partitioned", SF_A)) is base1
 
 
 def test_aqe_skew_join_splits_hot_partition(spark):

@@ -195,28 +195,22 @@ def test_purge_escaped_partitions_gate_query(spark, tmp_path, monkeypatch):
     under the old Python-rendered matching a fully-purged escaped
     partition survived on disk (the r9 bug class this query gates)."""
     import os
+    import shutil
 
     from dbt_economic_indicators_eu_spark.queries import storage
 
     built = {}
-    real_ensure = storage._ensure_layout
+    real_scratch = storage.session_scratch
 
-    def spy(spark_, kind, sf_dir, build):
-        base = real_ensure(spark_, kind, sf_dir, build)
-        built[kind] = base
+    def spy(spark_, key, fill=None):
+        base = real_scratch(spark_, key, fill)
+        built[key[0]] = base
         return base
 
-    monkeypatch.setattr(storage, "_ensure_layout", spy)
-    # fresh layout per test run: the cache keys (app, kind, sf_dir);
-    # rmtree the evicted base — a bare pop would orphan it past the
-    # atexit sweep, which iterates only current cache values
-    stale = storage._LAYOUT_CACHE.pop(
-        storage._layout_key(spark, "purge_escaped", SF_DIR), None
-    )
-    if stale is not None:
-        import shutil
-
-        shutil.rmtree(stale, ignore_errors=True)
+    monkeypatch.setattr(storage, "session_scratch", spy)
+    # fresh layout per test run: a session scratch dir removed by hand
+    # is rebuilt on the next call
+    shutil.rmtree(real_scratch(spark, ("purge_escaped", SF_DIR)))
     out = storage.q_purge_escaped_partitions(spark, SF_DIR)
     rows = out.collect()
     base = built["purge_escaped"]

@@ -234,8 +234,8 @@ def test_stream_sessionize_matches_batch(spark):
 
 def test_stream_handles_legacy_nanos_encoding(spark, tmp_path):
     """The driver has shipped events.parquet as TIMESTAMP(NANOS) in a
-    prior round; the stream source must sniff the footer and normalize
-    to the same NTZ values as the micros path."""
+    prior round; the stream source must read it with the batch scan's
+    schema and normalize to the same NTZ values as the micros path."""
     import datetime as dt
 
     import pyarrow as pa
@@ -271,10 +271,11 @@ def test_stream_handles_legacy_nanos_encoding(spark, tmp_path):
 def test_stream_handles_directory_and_ltz_encodings(spark, tmp_path, out_type):
     """Spark-written events.parquet is a DIRECTORY of part files whose
     ``timestamp`` (LTZ) column is INT96 or tz-adjusted micros in the
-    footer — the sniff must pick a part file (pq.ParquetFile fails on a
-    directory) and normalize LTZ→NTZ like the batch load() (identity
-    wall clock under the pinned UTC zone). INT96 also disambiguates
-    from INT64 nanos: pyarrow reports both as timestamp[ns]."""
+    footer — the stream must read the directory itself and normalize
+    LTZ→NTZ through the batch load()'s ``ts_to_ntz`` (identity wall
+    clock under the pinned UTC zone). INT96 reads as ``timestamp``, not
+    as the nanos ``bigint``, though pyarrow reports both as
+    timestamp[ns]."""
     import datetime as dt
 
     d = str(tmp_path / f"dir_{out_type}")
